@@ -132,10 +132,6 @@ def _serving_benches(spark, sf_dir: str):
     # snapshot as an atomic companion, and the timed probe reads BOTH
     # off the published version — the deployment shape (no lineage to
     # the corpus feature plan, no per-probe feature recompute).
-    from prod_recommendation_pyspark_spark.operators.hybrid import (
-        projection_window_index,
-        projection_window_probe,
-    )
     from prod_recommendation_pyspark_spark.queries.similarity import (
         _FD_DIM,
         _FD_DIRECTION,
@@ -151,8 +147,9 @@ def _serving_benches(spark, sf_dir: str):
 
     fd_pros, fd_clis = _fd_sides(spark, sf_dir)
     publish_versioned(
-        projection_window_index(
-            fd_clis, "src_custkey", _FD_DIRECTION, window=_FD_WINDOW
+        rank_window_index(
+            fd_clis, "src_custkey", window=_FD_WINDOW,
+            direction=_FD_DIRECTION,
         ),
         f"{base}/fd_index", partition_by=["__lvl"],
         companions={"features": fd_clis},
@@ -166,7 +163,7 @@ def _serving_benches(spark, sf_dir: str):
     ).localCheckpoint()
 
     def projection_window_serving():
-        cand = projection_window_probe(
+        cand = rank_window_probe(
             fd_batch, fd_index, "tgt_custkey", "src_custkey"
         )
         return hybrid_topk_pruned(
@@ -177,7 +174,7 @@ def _serving_benches(spark, sf_dir: str):
             candidates=cand, dim=_FD_DIM, broadcast_sides=True,
         ).count()
 
-    yield "serving:projection_window_probe", projection_window_serving
+    yield "serving:projection_rank_window_probe", projection_window_serving
 
     # IVF: nightly list-partitioned artifact reloaded cold, probe the
     # standard query batch (assign -> DPP list fetch -> exact re-rank)

@@ -50,10 +50,7 @@ from prod_recommendation_pyspark_spark.operators.similarity import (
     _grid_shape,
     _probe_geometry,
     _replicate_grid,
-    hyperplane_signature,
-    ivf_assign,
     probe_dim,
-    random_hyperplane_tables,
 )
 
 DEFAULT_W_HOPS = 0.399  # search_ranking_peers.py:608
@@ -341,186 +338,6 @@ def hybrid_topk(
     return windowed_topk(out, left_id, [F.col("score").desc(), F.col(right_id)], k)
 
 
-#: NAICS-arm skew guard: right rows per (prefix-block × sub-block) task
-DEFAULT_MAX_BLOCK_ROWS = 100_000
-
-
-def hybrid_candidates(
-    left: DataFrame,
-    right: DataFrame,
-    left_id: str,
-    right_id: str,
-    vec_col: str = "vec",
-    naics_col: str = "naics",
-    tables: list[list[list[float]]] | None = None,
-    naics_prefix_len: int = 4,
-    max_block_rows: int = DEFAULT_MAX_BLOCK_ROWS,
-    quantile_buckets: int | None = None,
-) -> DataFrame:
-    """Candidate (left, right) pairs for pruned peer search: the union
-    of an industry-prefix block join (pairs sharing the first
-    ``naics_prefix_len`` code chars — the pairs the hops term rewards)
-    and a vector-blocking join (pairs the cosine term rewards).
-    Together the two blocks cover both routes by which a pair can
-    reach a high hybrid score, WITHOUT the all-pairs product: each arm
-    is an equi-join whose build side is a scan-level projection, so at
-    100 TB this is two shuffles on bounded keys instead of an O(L×R)
-    score matrix.
-
-    Two cosine-arm strategies, chosen by the vectors' geometry:
-
-    * ``quantile_buckets=B`` — equi-depth blocking on the normalized
-      second component (a monotone angle proxy when first components
-      are non-negative, as scaled nonneg features are): B exact
-      quantile splits of the RIGHT side (one aggregate, broadcast),
-      each right row in its bucket, each left row probing its bucket
-      ±1.  Equal-depth buckets make per-bucket pair counts uniform BY
-      CONSTRUCTION (the skew guard is built in), the right rows per
-      bucket is |R|/B (the scale knob: grow B with density), and ±1
-      neighbor probing makes bucket-boundary placement robust to
-      last-ulp split drift — which is what keeps an external SQL
-      replay hash-stable.  This is the arm for LOW-dimensional
-      vectors, where sign-LSH degenerates: d-dim sign-LSH yields at
-      most 2·n_planes regions in 2-D, and angularly concentrated data
-      (all-positive features) collapses into a handful of giant
-      buckets — measured on the sf0.1 firmographics, 2×4-plane LSH
-      left 19.2M of 20.25M pairs as "candidates" (95% — no pruning).
-    * ``tables=[...]`` — multi-table sign-LSH buckets, the arm for
-      high-dimensional embeddings (see ``sign_lsh_self_pairs``).
-
-    ``tables=None`` with no ``quantile_buckets`` derives 4 seeded
-    sign-LSH tables × 8 planes from a dim probe of the left vectors,
-    so a cosine arm is ALWAYS on by default — a pruned search without
-    one silently loses every cross-industry high-cosine peer.  Pass
-    ``tables=[]`` to explicitly request NAICS-only blocking.
-
-    Skew guard (NAICS arm): one dominant NAICS prefix would otherwise
-    become one giant join bucket (a single straggler task computing
-    |L|×|R| pairs at scale).  Blocks whose right side exceeds
-    ``max_block_rows`` are salted — right rows hash into
-    ceil(count/cap) sub-blocks, left rows in that block fan out across
-    them.  The per-prefix split table is tiny (≤10⁴ NAICS prefixes)
-    and broadcast; the candidate SET is unchanged, only its task
-    layout.
-
-    Pure Catalyst (substring block keys, exact-percentile splits,
-    seeded hyperplane signature literals) — reproducible in ANSI SQL
-    for oracle checks."""
-    if tables is None and quantile_buckets is None:
-        dim = probe_dim(left, vec_col)
-        # empty left relation → no queries → the NAICS arm alone
-        # already yields the correct empty candidate set
-        tables = [] if dim is None else random_hyperplane_tables(dim, 8, 4, seed=7)
-    tables = tables or []
-    naics_l = left.select(
-        F.col(left_id),
-        F.substring(F.col(naics_col), 1, naics_prefix_len).alias("__blk"),
-    )
-    naics_r = right.select(
-        F.col(right_id),
-        F.substring(F.col(naics_col), 1, naics_prefix_len).alias("__blk"),
-    )
-    splits = naics_r.groupBy("__blk").agg(
-        F.greatest(
-            F.lit(1),
-            F.ceil(F.count(F.lit(1)) / F.lit(max_block_rows)),
-        )
-        .cast("int")
-        .alias("__ns")
-    )
-    r_sub = naics_r.join(F.broadcast(splits), "__blk").withColumn(
-        "__sub", F.pmod(F.xxhash64(F.col(right_id)), F.col("__ns")).cast("int")
-    )
-    l_sub = naics_l.join(F.broadcast(splits), "__blk").withColumn(
-        "__sub", F.explode(F.sequence(F.lit(0), F.col("__ns") - 1))
-    )
-    cand = l_sub.join(r_sub, ["__blk", "__sub"]).select(left_id, right_id)
-    if tables:
-        dvec = F.col(vec_col).cast("array<double>")
-
-        def banded(df: DataFrame, id_col: str) -> DataFrame:
-            sigs = df.select(
-                F.col(id_col),
-                *[
-                    hyperplane_signature(dvec, t).alias(f"__sig{i}")
-                    for i, t in enumerate(tables)
-                ],
-            )
-            return sigs.select(
-                id_col,
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(i).alias("tbl"), F.col(f"__sig{i}").alias("sig")
-                            )
-                            for i in range(len(tables))
-                        ]
-                    )
-                ).alias("__k"),
-            ).select(
-                id_col,
-                F.col("__k.tbl").alias("__tbl"),
-                F.col("__k.sig").alias("__sig"),
-            )
-
-        lsh = banded(left, left_id).join(
-            banded(right, right_id), ["__tbl", "__sig"]
-        ).select(left_id, right_id)
-        cand = cand.unionByName(lsh)
-    if quantile_buckets:
-        b = quantile_buckets
-        nrm = F.sqrt(
-            F.aggregate(
-                F.col(vec_col).cast("array<double>"),
-                F.lit(0.0),
-                lambda a, x: a + x * x,
-            )
-        )
-        v1n = (F.element_at(F.col(vec_col), 2).cast("double") / nrm).alias(
-            "__v1"
-        )
-        splits = right.agg(
-            F.percentile(
-                F.element_at(F.col(vec_col), 2).cast("double")
-                / F.sqrt(
-                    F.aggregate(
-                        F.col(vec_col).cast("array<double>"),
-                        F.lit(0.0),
-                        lambda a, x: a + x * x,
-                    )
-                ),
-                F.array(*[F.lit(i / b) for i in range(1, b)]),
-            ).alias("__splits")
-        )
-        # bucket = |{splits ≤ v}| — a codegen'd HOF over the broadcast
-        # (B−1)-element split array; identical expression both sides
-        bucket = F.size(
-            F.filter("__splits", lambda s: s <= F.col("__v1"))
-        ).alias("__qb")
-        r_q = (
-            right.select(F.col(right_id), v1n)
-            .crossJoin(F.broadcast(splits))
-            .select(right_id, bucket)
-        )
-        l_q = (
-            left.select(F.col(left_id), v1n)
-            .crossJoin(F.broadcast(splits))
-            .select(left_id, bucket)
-            .select(
-                left_id,
-                F.explode(
-                    F.array(
-                        F.col("__qb") - 1, F.col("__qb"), F.col("__qb") + 1
-                    )
-                ).alias("__qb"),
-            )
-        )
-        qcand = l_q.join(r_q, "__qb").select(left_id, right_id)
-        cand = cand.unionByName(qcand)
-    return cand.distinct()
-
-
 #: Allowed derived-window values: powers of two from 64 up.  A ladder
 #: (not raw 2·max_needed) keeps the derivation STABLE — a ±1 wobble in
 #: the sampled statistic (e.g. an oracle replaying the same derivation
@@ -674,6 +491,42 @@ def _needed_window_stats(
     return int(row["n"]), (None if row["mx"] is None else int(row["mx"]))
 
 
+def _calibration_pairs(
+    sample: DataFrame, right: DataFrame, left_id: str, right_id: str,
+    **score_kwargs,
+) -> DataFrame:
+    """The calibration sample's exact top-k as materialized
+    ``(__tid, __rid)`` id pairs — the derivation's evidence side
+    (:func:`_calibration_exact_topk`), checkpointed because
+    ``_needed_window_stats`` joins it after the concurrent rank
+    build."""
+    exact = _calibration_exact_topk(
+        sample, right, left_id, right_id, **score_kwargs
+    )
+    return exact.select(
+        F.col(left_id).alias("__tid"), F.col(right_id).alias("__rid")
+    ).localCheckpoint()
+
+
+def _split_ranked(ranked: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``(clients, prospects)`` sides of a ``_distributed_rank``
+    output: client positions ``(__rid, __lvl, __blk, __cpos)`` and
+    prospect insertion counts ``(__tid, __lvl, __blk, __ins)``."""
+    clis = ranked.filter(F.col("__isc") == 1).select(
+        F.col("__id").alias("__rid"),
+        "__lvl",
+        "__blk",
+        F.col("__pos").alias("__cpos"),
+    )
+    pros = ranked.filter(F.col("__isc") == 0).select(
+        F.col("__id").alias("__tid"),
+        "__lvl",
+        "__blk",
+        F.col("__pos").alias("__ins"),
+    )
+    return clis, pros
+
+
 def rank_window_candidates(
     left: DataFrame,
     right: DataFrame,
@@ -693,13 +546,15 @@ def rank_window_candidates(
     min_window: int = 64,
     window_cache: dict | None = None,
     cache_key=None,
+    direction: list[float] | None = None,
 ) -> DataFrame:
-    """LINEAR-candidate generation for the hybrid peer score — the
-    asymptotic replacement for :func:`hybrid_candidates`, whose two
-    arms are constant-factor prunes (a full p-prefix block product is
+    """LINEAR-candidate generation for the hybrid peer score.  It
+    replaced the round-7 block/bucket prune, whose two arms were
+    constant-factor prunes (a full p-prefix block product is
     pairs/#blocks; B fixed quantile buckets are 3·pairs/B — both stay
     QUADRATIC, which is why the measured sf1 wall of the block/bucket
-    path exceeded the exact kernel's: 672s vs 166s on 2.02e9 pairs).
+    path exceeded the exact kernel's: 672s vs 166s on 2.02e9 pairs;
+    SCALE.md round-9 appendix).
 
     Level decomposition (exactness argument): the hybrid score is
     ``w_dot·dot + w_hops·hops + w_geo·hav`` and ``naics_hops_score``
@@ -733,8 +588,27 @@ def rank_window_candidates(
     within-level dot — a count that grows with ANGLE-TIE DENSITY
     (measured sf1: window 64 → recall 0.9924, 256 → 1.0000; a corpus
     of heavily repeated vectors needs window ≥ its tie counts).
-    Parity with the exact kernel is pinned by pytest and the
-    registered recall query.
+    Parity with the exact kernel is pinned by pytest.
+
+    ``direction`` (round 13 — the GENERAL-DIM key): sort each arm by
+    the vectors' projection onto a FIXED direction
+    (:func:`_projection_key`) instead of the 2-D angle proxy — same
+    machinery, same linear O(|L|·levels·2·window) candidate volume.
+    At higher dims a single projection is lossy (two vectors can
+    share a projection while differing in the complement), so this
+    key is an APPROXIMATE candidate source whose recall is measured
+    (``peer_search_fulldim_recall``).  ``direction`` must be fixed
+    literals (e.g. the reference's feature-weight profile,
+    search_ranking_peers.py:442,608-611) so the projection is per-row
+    deterministic and the SQL oracle replays it bit-for-bit — a
+    data-derived direction would ride a nondeterministically-ordered
+    aggregation and flip ULP ties across engines.  Measured 9-D need
+    (SCALE.md round-13): max-need 96 → 133 → 1305 at sf0.01/0.1/1 —
+    the window GROWS with the corpus' projection-shadow density, so on
+    near-uniform high-dim data the exact kernel (``hybrid_topk``)
+    stays the exact fallback (see :func:`projection_window_wins`).
+    Vectors must have exactly ``len(direction)`` components (2 without
+    a direction) — anything else raises.
 
     Mechanics: clients explode to their arms (lvl −1 = malformed
     sentinel, else lvl 0 = global + lvl p = p-prefix block);
@@ -800,16 +674,17 @@ def rank_window_candidates(
     drop the entry when the corpus is rebuilt (the nightly rhythm
     re-derives at index build instead — :func:`rank_window_index`)."""
     spark = left.sparkSession
-    _require_dim2(right, vec_col, "rank_window_candidates(right)")
-    _require_dim2(left, vec_col, "rank_window_candidates(left)")
+    dim = _key_dim(direction)
+    _require_dim(right, vec_col, dim, "rank_window_candidates(right)")
+    _require_dim(left, vec_col, dim, "rank_window_candidates(left)")
     if (
         window is None
         and window_cache is not None
         and cache_key in window_cache
     ):
         window = int(window_cache[cache_key])
-    cli = _arm_clients(right, right_id, vec_col, naics_col, code_len)
-    pro = _arm_prospects(left, left_id, vec_col, naics_col, code_len)
+    cli = _arm_clients(right, right_id, vec_col, naics_col, code_len, direction)
+    pro = _arm_prospects(left, left_id, vec_col, naics_col, code_len, direction)
     u = cli.unionByName(pro)
     if window is None:
         # COLD derivation: the calibration pass (sample agg + exact
@@ -823,15 +698,12 @@ def rank_window_candidates(
             )
             if not n_sampled:
                 return None  # empty left: any window yields empty
-            exact = _calibration_exact_topk(
+            return _calibration_pairs(
                 sample, right, left_id, right_id,
                 vec_col=vec_col, naics_col=naics_col,
                 lat_col=lat_col, lon_col=lon_col,
                 k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
             )
-            return exact.select(
-                F.col(left_id).alias("__tid"), F.col(right_id).alias("__rid")
-            ).localCheckpoint()
 
         ranked, pairs = _rank_overlapping_calibration(spark, u, _calibrate)
     else:
@@ -841,18 +713,7 @@ def rank_window_candidates(
         # materialization pass here would SERIALIZE that (measured
         # +0.3-0.5s at sf0.1), so only the cold path materializes
         ranked, pairs = _distributed_rank(u, spark), None
-    clis_base = ranked.filter(F.col("__isc") == 1).select(
-        F.col("__id").alias("__rid"),
-        "__lvl",
-        "__blk",
-        F.col("__pos").alias("__cpos"),
-    )
-    pros_ins = ranked.filter(F.col("__isc") == 0).select(
-        F.col("__id").alias("__tid"),
-        "__lvl",
-        "__blk",
-        F.col("__pos").alias("__ins"),
-    )
+    clis_base, pros_ins = _split_ranked(ranked)
     if window is None:
         if pairs is not None:
             _, mx = _needed_window_stats(pairs, pros_ins, clis_base)
@@ -867,24 +728,35 @@ def rank_window_candidates(
     return _window_fetch(pros_ins, clis_pos, window, left_id, right_id)
 
 
-def _require_dim2(df: DataFrame, vec_col: str, who: str) -> None:
-    """Fail LOUDLY when the rank-window path is handed vectors it
-    cannot order correctly.  ``_v1n_expr`` uses component 2 of the
-    normalized vector as the angle proxy — a total order that matches
-    the dot product ONLY for 2-D non-negative vectors.  Before this
-    guard, a caller passing 64-dim embeddings got silently wrong
-    candidates (low recall, no error); now misuse raises at plan-build
-    time with a pointer at the high-dim operators.  Empty inputs pass
-    (``probe_dim`` returns None; downstream yields empty results)."""
-    dim = probe_dim(df, vec_col)
-    if dim is not None and dim != 2:
+def _key_dim(direction: list[float] | None) -> int:
+    """Vector dim the window sort key reads: 2 for the angle proxy,
+    one component per entry for a projection direction."""
+    return 2 if direction is None else len(direction)
+
+
+def _require_dim(df: DataFrame, vec_col: str, dim: int, who: str) -> None:
+    """Fail LOUDLY when the rank-window path is handed vectors its sort
+    key cannot order correctly.  Without a direction the key is
+    ``_v1n_expr`` — component 2 of the normalized vector as the angle
+    proxy, a total order that matches the dot product ONLY for 2-D
+    non-negative vectors (before this guard, 64-dim embeddings got
+    silently wrong candidates: low recall, no error).  With a
+    direction the key is ``_projection_key``'s Σ vec[i]·direction[i],
+    which reads NULL past a shorter vector's end and silently ignores
+    a longer vector's trailing components.  Either misuse raises at
+    plan-build time.  Empty inputs pass (``probe_dim`` returns None;
+    downstream yields empty results)."""
+    actual = probe_dim(df, vec_col)
+    if actual is not None and actual != dim:
         raise ValueError(
-            f"{who}: rank-window candidates order clients by "
-            f"element_at({vec_col}, 2)/||{vec_col}|| — exact only for "
-            f"2-D non-negative vectors, but '{vec_col}' has dim={dim}. "
-            "For higher-dim embeddings use the ANN operators instead "
-            "(ann_lsh_topk / ivf / ivfpq in operators/similarity.py, "
-            "operators/pq.py)."
+            f"{who}: the rank-window sort key reads {dim}-dim vectors "
+            f"(the angle proxy element_at({vec_col}, 2)/||{vec_col}|| "
+            "without a direction, exact only for 2-D non-negative "
+            "vectors; else one component per direction entry), but "
+            f"'{vec_col}' has dim={actual}. Pass a direction= with one "
+            "weight per component, or use the ANN operators for "
+            "higher-dim embeddings (ann_lsh_topk / ivf / ivfpq in "
+            "operators/similarity.py, operators/pq.py)."
         )
 
 
@@ -911,6 +783,15 @@ def _projection_key(direction: list[float], vec_col: str):
     for i, w in enumerate(direction[1:], start=2):
         proj = proj + F.element_at(F.col(vec_col), i).cast("double") * float(w)
     return proj.alias("__v1n")
+
+
+def _sort_key(vec_col: str, direction: list[float] | None):
+    """The within-arm sort key ``__v1n`` — the ONE place the window
+    family's two keys differ: the 2-D angle proxy without a
+    direction, else the projection onto ``direction``."""
+    if direction is None:
+        return _v1n_expr(vec_col)
+    return _projection_key(direction, vec_col)
 
 
 def _direction_str(direction: list[float]) -> str:
@@ -948,20 +829,19 @@ def _arm_clients(
     vec_col: str,
     naics_col: str,
     code_len: int,
-    key_expr=None,
+    direction: list[float] | None = None,
 ) -> DataFrame:
     """Clients exploded to their arms: malformed codes go ONLY to the
     lvl −1 sentinel arm; well-formed codes to lvl 0 (global) + every
-    p-prefix arm.  ``key_expr`` (a Column aliased ``__v1n``) overrides
-    the 2-D angle proxy as the within-arm sort key — the
-    projection-window generalization (round 13)."""
+    p-prefix arm.  The within-arm sort key ``__v1n`` is
+    :func:`_sort_key` of ``direction``."""
     wf_lvls = F.array(*[F.lit(i) for i in range(code_len + 1)])
     mal_lvls = F.array(F.lit(-1))
     malformed = _malformed_expr(naics_col, code_len)
     return (
         right.select(
             F.col(right_id).alias("__id"),
-            key_expr if key_expr is not None else _v1n_expr(vec_col),
+            _sort_key(vec_col, direction),
             F.col(naics_col),
         )
         .select(
@@ -988,7 +868,7 @@ def _arm_prospects(
     vec_col: str,
     naics_col: str,
     code_len: int,
-    key_expr=None,
+    direction: list[float] | None = None,
 ) -> DataFrame:
     """Prospects probe EVERY arm (a malformed prospect's lvl>=1 probes
     carry junk/NULL prefixes — NULL keys drop from the equi-join, junk
@@ -998,7 +878,7 @@ def _arm_prospects(
     return (
         left.select(
             F.col(left_id).alias("__id"),
-            key_expr if key_expr is not None else _v1n_expr(vec_col),
+            _sort_key(vec_col, direction),
             F.col(naics_col),
         )
         .select(
@@ -1153,17 +1033,22 @@ def derive_rank_window_stats(
     min_window: int = 64,
     prev_window: int | None = None,
     warm_sample_mod: int | None = None,
+    direction: list[float] | None = None,
 ) -> dict:
     """STANDALONE window derivation — for :func:`rank_window_index`
     builds (derive once at index time; probes must reuse the index's
-    window) and the registered derivation-evidence query.  Same
-    estimator as ``rank_window_candidates(window=None)``: exact-score
-    a deterministic prospect sample (``left_id % sample_mod == 0``,
-    auto-widened to ≥8 prospects — :func:`_derivation_sample`)
-    against the whole corpus — ONE linear |sample|·|R| pass — read
-    each true top-k pair's minimum required window off a rank of the
-    full client corpus plus only the sampled prospects, then pad ×2
-    and round up the power-of-two ladder (floor ``min_window``).
+    window), the registered derivation-evidence query, and the
+    kernel-vs-window DISPATCH of the general-dim batch query
+    (:func:`projection_window_wins` compares the derived window's
+    predicted candidate volume against the exact kernel's).  Same
+    estimator as ``rank_window_candidates(window=None)``, at the same
+    sort key (``direction``): exact-score a deterministic prospect
+    sample (``left_id % sample_mod == 0``, auto-widened to ≥8
+    prospects — :func:`_derivation_sample`) against the whole corpus
+    — ONE linear |sample|·|R| pass — read each true top-k pair's
+    minimum required window off a rank of the full client corpus plus
+    only the sampled prospects, then pad ×2 and round up the
+    power-of-two ladder (floor ``min_window``).
 
     ``prev_window`` WARM-STARTS the derivation from the previous
     snapshot's derived window (round-14 verdict #3 / optimization
@@ -1188,7 +1073,7 @@ def derive_rank_window_stats(
     full-pass window with the calibration cost cut ~2.5-7×
     (OPTIMIZATION_r15.md).
 
-    SENSITIVITY LIMIT (measured, sf1 projection family): the warm
+    SENSITIVITY LIMIT (measured, sf1 projection key): the warm
     check compares a SMALLER-sample max-need against ``prev_window``,
     and max statistics shrink with sample size (sf1: 38-prospect warm
     mx 510 vs 300-prospect full mx 1131) — so a prev sitting at or
@@ -1211,14 +1096,19 @@ def derive_rank_window_stats(
     ``warm_start`` (True = previous window kept) and ``warm_window``
     (what the small-sample pass derived)."""
     spark = left.sparkSession
+    score_kw = dict(
+        vec_col=vec_col, naics_col=naics_col,
+        lat_col=lat_col, lon_col=lon_col,
+        k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
+    )
     if prev_window is not None:
+        pass_kw = dict(
+            score_kw, code_len=code_len, min_window=min_window,
+            direction=direction,
+        )
         warm = derive_rank_window_stats(
             left, right, left_id, right_id,
-            vec_col=vec_col, naics_col=naics_col,
-            lat_col=lat_col, lon_col=lon_col,
-            k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
-            sample_mod=warm_sample_mod or sample_mod * 8,
-            code_len=code_len, min_window=min_window,
+            sample_mod=warm_sample_mod or sample_mod * 8, **pass_kw,
         )
         if warm["window"] <= prev_window:
             return {
@@ -1228,55 +1118,32 @@ def derive_rank_window_stats(
                 "warm_window": warm["window"],
             }
         full = derive_rank_window_stats(
-            left, right, left_id, right_id,
-            vec_col=vec_col, naics_col=naics_col,
-            lat_col=lat_col, lon_col=lon_col,
-            k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
-            sample_mod=sample_mod, code_len=code_len,
-            min_window=min_window,
+            left, right, left_id, right_id, sample_mod=sample_mod, **pass_kw
         )
         return {
             **full,
             "warm_start": False,
             "warm_window": warm["window"],
         }
-    _require_dim2(right, vec_col, "derive_rank_window_stats(right)")
-    _require_dim2(left, vec_col, "derive_rank_window_stats(left)")
+    dim = _key_dim(direction)
+    _require_dim(right, vec_col, dim, "derive_rank_window_stats(right)")
+    _require_dim(left, vec_col, dim, "derive_rank_window_stats(left)")
     sample, n_sampled, used_mod = _derivation_sample(
         left, left_id, sample_mod
     )
-    cli = _arm_clients(right, right_id, vec_col, naics_col, code_len)
-    pro = _arm_prospects(sample, left_id, vec_col, naics_col, code_len)
-
+    cli = _arm_clients(right, right_id, vec_col, naics_col, code_len, direction)
+    pro = _arm_prospects(sample, left_id, vec_col, naics_col, code_len, direction)
     # rank build and calibration kernel overlap as concurrent driver
     # jobs (guide §2.6); the rank is materialized because the stats
     # job consumes both of its side projections (guide §2.4)
-    def _calibrate():
-        exact = _calibration_exact_topk(
-            sample, right, left_id, right_id,
-            vec_col=vec_col, naics_col=naics_col,
-            lat_col=lat_col, lon_col=lon_col,
-            k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
-        )
-        return exact.select(
-            F.col(left_id).alias("__tid"), F.col(right_id).alias("__rid")
-        ).localCheckpoint()
-
     ranked, pairs = _rank_overlapping_calibration(
-        spark, cli.unionByName(pro), _calibrate
+        spark,
+        cli.unionByName(pro),
+        lambda: _calibration_pairs(
+            sample, right, left_id, right_id, **score_kw
+        ),
     )
-    clis_base = ranked.filter(F.col("__isc") == 1).select(
-        F.col("__id").alias("__rid"),
-        "__lvl",
-        "__blk",
-        F.col("__pos").alias("__cpos"),
-    )
-    pros_ins = ranked.filter(F.col("__isc") == 0).select(
-        F.col("__id").alias("__tid"),
-        "__lvl",
-        "__blk",
-        F.col("__pos").alias("__ins"),
-    )
+    clis_base, pros_ins = _split_ranked(ranked)
     n_pairs, mx = _needed_window_stats(pairs, pros_ins, clis_base)
     return {
         "n_sampled": n_sampled,
@@ -1318,6 +1185,7 @@ def rank_window_index(
     sample_mod: int = 500,
     min_window: int = 64,
     prev_window: int | None = None,
+    direction: list[float] | None = None,
 ) -> DataFrame:
     """Build the PERSISTABLE client-side index of the rank-window peer
     search — the serving-path split (same pattern as the incremental
@@ -1327,14 +1195,22 @@ def rank_window_index(
     anything.
 
     Returns one row per (client, arm): ``(__rid, __v1n, __lvl, __blk,
-    __cpos, __wb, __w)`` — the client's 1-based angle-rank within the
-    arm, its window-block id, and the BUILD WINDOW as a constant
-    metadata column.  Positions are DENSE per (lvl, blk), so every
-    window block below an arm's last is exactly ``window`` rows — the
-    fact the probe's offset arithmetic relies on; ``__w`` is what lets
+    __cpos, __wb, __w)`` — the client's 1-based rank within the arm,
+    its window-block id, and the BUILD WINDOW as a constant metadata
+    column.  Positions are DENSE per (lvl, blk), so every window block
+    below an arm's last is exactly ``window`` rows — the fact the
+    probe's offset arithmetic relies on; ``__w`` is what lets
     :func:`rank_window_probe` verify (or derive) the window it must
     use — a probe with a mismatched window silently fetches wrong
     neighborhoods, so the window travels WITH the artifact.
+
+    ``direction`` builds the GENERAL-DIM artifact (round 13): the arms
+    are ranked by the projection key (see
+    :func:`rank_window_candidates`) and the direction is stamped next
+    to the window as a second metadata column, ``__dir`` (canonical
+    string form).  Probe, insert, compact and :func:`serve_batch` read
+    it off the artifact (:func:`_resolve_artifact`), so no caller can
+    key prospects or arrivals differently than the corpus was ranked.
 
     Scale: (code_len+1)·|R| slim rows, ranked by the distributed
     dense_ids construction (no single-task sort); write it
@@ -1356,7 +1232,7 @@ def rank_window_index(
     only when the corpus drifted past the previous window (see
     :func:`derive_rank_window_stats`)."""
     spark = right.sparkSession
-    _require_dim2(right, vec_col, "rank_window_index(right)")
+    _require_dim(right, vec_col, _key_dim(direction), "rank_window_index(right)")
     if window is None:
         if calibration is None or calibration_id is None:
             raise ValueError(
@@ -1372,20 +1248,21 @@ def rank_window_index(
             k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
             sample_mod=sample_mod, code_len=code_len,
             min_window=min_window, prev_window=prev_window,
+            direction=direction,
         )["window"]
-    cli = _arm_clients(right, right_id, vec_col, naics_col, code_len)
+    cli = _arm_clients(right, right_id, vec_col, naics_col, code_len, direction)
     ranked = _distributed_rank(cli, spark)
-    return _index_rows(ranked, window)
+    return _index_rows(ranked, window, direction)
 
 
 def _index_rows(
-    ranked: DataFrame, window: int, dir_str: str | None = None
+    ranked: DataFrame, window: int, direction: list[float] | None = None
 ) -> DataFrame:
     """Artifact rows from a ``_distributed_rank`` output: dense per-arm
     positions, window blocks, and the build metadata (``__w``; plus
-    ``__dir`` for the projection family) — shared by the nightly
-    builds, compaction, and insert so every producer stamps the same
-    schema."""
+    ``__dir`` when keyed by a projection direction) — shared by the
+    nightly build, compaction, and insert so every producer stamps the
+    same schema."""
     cols = [
         F.col("__id").alias("__rid"),
         "__v1n",
@@ -1395,57 +1272,123 @@ def _index_rows(
         F.floor((F.col("__pos") - 1) / window).alias("__wb"),
         F.lit(int(window)).alias("__w"),
     ]
-    if dir_str is not None:
-        cols.append(F.lit(dir_str).alias("__dir"))
+    if direction is not None:
+        cols.append(F.lit(_direction_str(direction)).alias("__dir"))
     return ranked.select(*cols)
 
 
-def _resolve_probe_window(index: DataFrame, window: int | None) -> int:
-    """Window the probe MUST use = the window the index was built
-    with: ``ins = swb·window + cnt`` and the ``__wb`` equi-join are
-    silently wrong on any other value (round-10 advice).  Indexes
-    carry it as the ``__w`` metadata column; this reads it (one
-    small agg job) and either returns it (``window=None`` — derive) or
-    asserts equality (explicit ``window`` — validate).  The agg checks
-    min == max, not an arbitrary first row: an index path holding
-    MIXED builds (a window-32 rebuild appended over a window-64
-    artifact, or two builds unioned) is exactly the silent-wrong-
-    neighborhood hazard this function exists to catch, so it raises
-    loudly.  Pre-round-11 indexes without ``__w`` require an explicit
-    window."""
-    if "__w" in index.columns:
-        row = index.agg(
-            F.min("__w").alias("lo"), F.max("__w").alias("hi")
-        ).first()
-        if row is None or row["lo"] is None:
-            # empty index: every window yields the empty result
-            return window if window is not None else 64
-        if int(row["lo"]) != int(row["hi"]):
+def _resolve_artifact(
+    index: DataFrame,
+    who: str,
+    window: int | None = None,
+    direction: list[float] | None = None,
+    keyed: DataFrame | None = None,
+    vec_col: str = "vec",
+    empty_ok: bool = False,
+) -> tuple[int, list[float] | None]:
+    """THE artifact resolver: the window and sort-key direction a
+    probe, insert, compaction or serving loop MUST use = the ones the
+    index was built with.  ``ins = swb·window + cnt``, the ``__wb``
+    equi-join and the arm order are silently wrong on any other value
+    (round-10 advice), so the artifact carries both as metadata
+    columns — ``__w`` and, for projection-keyed builds, ``__dir`` —
+    and this reads them in ONE small agg job.  Returns ``(window,
+    direction)``; ``direction`` None is the 2-D angle key.
+
+    Each value is either returned (caller passed None — derive) or
+    asserted equal (explicit — validate); ``who`` names the calling
+    operator in every error.  It raises on:
+
+    - MIXED builds (min ≠ max of ``__w`` or ``__dir``): an index path
+      holding a rebuild appended over an old artifact, or two builds
+      unioned, is exactly the silent-wrong-neighborhood hazard;
+    - an explicit window or direction that does not match the stored
+      one, or an explicit direction against a 2-D artifact;
+    - an index without ``__w`` (pre-round-11) and no explicit window;
+    - an EMPTY ``__dir`` artifact (e.g. fully tombstoned) with no
+      direction passed — prospect/arrival keys cannot be computed.
+      With ``empty_ok`` (compaction) it resolves to ``[]`` instead,
+      which keeps the artifact in the projection family (the stamped
+      ``__dir`` is then the empty string) for a later
+      direction-supplied insert.
+
+    An empty ``__w`` index resolves to the caller's window (64 when
+    None): every window yields the empty result.  ``keyed`` — the
+    prospect/arrival frame the caller will key — is dim-checked
+    against the resolved key (:func:`_require_dim`) before the window
+    checks, so a wrong-dim frame is named first."""
+    cols = index.columns
+    aggs = []
+    if "__w" in cols:
+        aggs += [F.min("__w").alias("w_lo"), F.max("__w").alias("w_hi")]
+    if "__dir" in cols:
+        aggs += [F.min("__dir").alias("d_lo"), F.max("__dir").alias("d_hi")]
+    row = index.agg(*aggs).first() if aggs else None
+    if "__dir" not in cols:
+        if direction is not None:
             raise ValueError(
-                f"rank_window_probe: index holds MIXED build windows "
-                f"__w ∈ [{int(row['lo'])}, {int(row['hi'])}] — e.g. a "
-                "rebuild appended over an old artifact. Rebuild the "
-                "index path cleanly; probing mixed builds silently "
-                "fetches wrong neighborhoods."
+                f"{who}: direction={list(direction)} was passed, but the "
+                "index carries no __dir metadata — it is a 2-D "
+                "rank-window artifact keyed by the angle proxy. Pass "
+                "direction=None."
             )
-        iw = int(row["lo"])
-        if window is None:
-            return iw
-        if int(window) != iw:
+    elif row["d_lo"] is None:
+        if direction is not None:
+            direction = [float(w) for w in direction]
+        elif empty_ok:
+            direction = []
+        else:
             raise ValueError(
-                f"rank_window_probe: window={window} does not match "
-                f"the index's build window __w={iw} — probing with a "
-                "mismatched window silently fetches wrong "
-                "neighborhoods. Pass window=None to use the index's."
+                f"{who}: the index is EMPTY and no direction was passed "
+                "— prospect/arrival keys cannot be computed; pass "
+                "direction= explicitly."
             )
-        return iw
-    if window is None:
+    elif row["d_lo"] != row["d_hi"]:
         raise ValueError(
-            "rank_window_probe: window=None but the index carries no "
-            "__w metadata column (pre-round-11 artifact) — pass the "
-            "window the index was built with explicitly."
+            f"{who}: index holds MIXED projection directions "
+            f"({row['d_lo']!r} vs {row['d_hi']!r}) — e.g. a rebuild "
+            "under a new direction appended over an old artifact. "
+            "Rebuild the index path cleanly."
         )
-    return int(window)
+    else:
+        stored = _parse_direction(row["d_lo"])
+        if direction is not None and [float(w) for w in direction] != stored:
+            raise ValueError(
+                f"{who}: direction={list(direction)} does not match the "
+                f"index's build direction {stored} — probing with a "
+                "mismatched projection silently fetches wrong "
+                "neighborhoods. Pass direction=None to use the index's."
+            )
+        direction = stored
+    if keyed is not None:
+        _require_dim(keyed, vec_col, _key_dim(direction), who)
+    if "__w" not in cols:
+        if window is None:
+            raise ValueError(
+                f"{who}: window=None but the index carries no __w "
+                "metadata column (pre-round-11 artifact) — pass the "
+                "window the index was built with explicitly."
+            )
+        return int(window), direction
+    if row["w_lo"] is None:
+        # empty index: every window yields the empty result
+        return (window if window is not None else 64), direction
+    lo, hi = int(row["w_lo"]), int(row["w_hi"])
+    if lo != hi:
+        raise ValueError(
+            f"{who}: index holds MIXED build windows __w ∈ [{lo}, {hi}] "
+            "— e.g. a rebuild appended over an old artifact. Rebuild the "
+            "index path cleanly; probing mixed builds silently fetches "
+            "wrong neighborhoods."
+        )
+    if window is not None and int(window) != lo:
+        raise ValueError(
+            f"{who}: window={window} does not match the index's build "
+            f"window __w={lo} — probing with a mismatched window "
+            "silently fetches wrong neighborhoods. Pass window=None to "
+            "use the index's."
+        )
+    return lo, direction
 
 
 def rank_window_probe(
@@ -1459,12 +1402,14 @@ def rank_window_probe(
     code_len: int = CODE_LEN,
     tombstones: DataFrame | None = None,
     broadcast_probes: bool = True,
+    direction: list[float] | None = None,
 ) -> DataFrame:
     """Probe a :func:`rank_window_index` with a prospect batch and
     return the SAME candidate pairs as the batch
-    :func:`rank_window_candidates` (pytest-pinned set equality) —
-    WITHOUT touching the client corpus beyond the probed window
-    blocks.  Per-row independent, so it composes with streaming
+    :func:`rank_window_candidates` at the build window and key
+    (pytest-pinned set equality, 2-D and projection-keyed) — WITHOUT
+    touching the client corpus beyond the probed window blocks.
+    Per-row independent, so it composes with streaming
     (``foreachBatch`` or a stream-static join per micro-batch) and
     splitting the prospect set across batches cannot change any
     prospect's candidates.
@@ -1474,7 +1419,7 @@ def rank_window_probe(
     ``ins = swb·window + |{clients in block swb with key < k}|`` where
     ``swb`` is the last block whose FIRST key ≤ k — found against a
     broadcast ≤|R|/window-row block-summary, then one ≤window-row
-    partial count.  The strict-less comparator on (angle, id) is the
+    partial count.  The strict-less comparator on (key, id) is the
     batch path's exactly.
 
     Scale: the block summary is |R|·(code_len+1)/window rows
@@ -1482,10 +1427,11 @@ def rank_window_probe(
     plus one straddling block — at serving batch sizes that is an
     index lookup, not a corpus pass.
 
-    ``window=None`` (the default) reads the window off the index's
-    ``__w`` metadata column; an explicit ``window`` is VALIDATED
-    against it — a mismatch raises instead of silently fetching wrong
-    neighborhoods (round-10 advice).
+    ``window=None`` and ``direction=None`` (the defaults) read the
+    build window and key off the artifact's ``__w``/``__dir``
+    metadata; explicit values are VALIDATED against it — a mismatch
+    raises instead of silently fetching wrong neighborhoods
+    (:func:`_resolve_artifact`).
 
     ``tombstones`` (a small frame carrying deleted client ids in a
     ``right_id`` column) removes clients from serving BETWEEN nightly
@@ -1510,42 +1456,44 @@ def rank_window_probe(
     (batch × arms)-sized broadcasts would exceed the broadcast/driver
     memory limits, and the shuffle join on the bounded
     (lvl, blk, wb) key is the right plan for that shape."""
-    if "__dir" in index.columns:
-        raise ValueError(
-            "rank_window_probe: this index carries __dir metadata — it "
-            "is a PROJECTION-window artifact; probe it with "
-            "projection_window_probe (the 2-D angle key would fetch "
-            "wrong neighborhoods)."
-        )
-    _require_dim2(left, vec_col, "rank_window_probe(left)")
-    window = _resolve_probe_window(index, window)
-    pro = _arm_prospects(left, left_id, vec_col, naics_col, code_len)
-    return _probe_fetch(
-        pro, index, window, left_id, right_id, tombstones,
+    window, direction = _resolve_artifact(
+        index, "rank_window_probe", window, direction,
+        keyed=left, vec_col=vec_col,
+    )
+    return _probe_resolved(
+        left, index, left_id, right_id, window, direction,
+        vec_col, naics_col, code_len, tombstones,
         broadcast_probes=broadcast_probes,
     )
 
 
-def _probe_fetch(
-    pro: DataFrame,
+def _probe_resolved(
+    left: DataFrame,
     index: DataFrame,
-    window: int,
     left_id: str,
     right_id: str,
-    tombstones: DataFrame | None,
+    window: int,
+    direction: list[float] | None = None,
+    vec_col: str = "vec",
+    naics_col: str = "naics",
+    code_len: int = CODE_LEN,
+    tombstones: DataFrame | None = None,
     broadcast_probes: bool = True,
 ) -> DataFrame:
-    """Key-agnostic probe body shared by :func:`rank_window_probe` and
-    :func:`projection_window_probe`: block-summary insertion
+    """Probe body AFTER :func:`_resolve_artifact` — shared by
+    :func:`rank_window_probe`, :func:`serve_batch` and the streaming
+    loops, which resolve the metadata ONCE at start (or per published
+    version) and must not re-run the agg job every micro-batch:
+    prospects keyed with ``direction``, then block-summary insertion
     arithmetic + windowed fetch + tombstone anti-join, entirely in
-    terms of the stored ``__v1n`` sort keys — the probing family only
-    differs in HOW the prospect's ``__v1n`` is computed.
+    terms of the stored ``__v1n`` sort keys.
 
     ``broadcast_probes`` gates every probe-derived broadcast hint
     (straddle, partial, and the fetch probes — NOT the ≤|R|/window-row
     block summary, which is index-derived and bounded); False is for
     corpus-sized probe relations where the (batch × arms) frames
     outgrow the broadcast limit (round-15 advice)."""
+    pro = _arm_prospects(left, left_id, vec_col, naics_col, code_len, direction)
     blocks = index.groupBy("__lvl", "__blk", "__wb").agg(
         F.min(F.struct("__v1n", F.col("__rid").alias("__id"))).alias("__lo")
     )
@@ -1659,23 +1607,14 @@ def rank_window_compact(
     name — the index stores ids as ``__rid``, so there is no caller
     column name to match against).
 
-    Works unchanged on PROJECTION-family artifacts (round 14): the
-    re-rank runs over the STORED ``__v1n`` keys, which already carry
-    the projection, and the ``__dir`` metadata is validated
-    (mixed-direction artifacts raise) and re-stamped."""
-    w = _resolve_probe_window(index, None)
-    dir_str = None
-    if "__dir" in index.columns:
-        stored = _resolve_probe_direction(
-            index, None, who="rank_window_compact", empty_ok=True
-        )
-        # an EMPTIED (fully-tombstoned) artifact has no resolvable
-        # direction (round-15 advice: degrade gracefully, like
-        # _resolve_probe_window's empty-index default) — stamp the
-        # empty canonical form: values in an empty frame are
-        # irrelevant, but the column keeps the artifact in the
-        # projection family for a later direction-supplied insert
-        dir_str = _direction_str(stored) if stored is not None else ""
+    Projection-keyed artifacts compact the same way: the stored
+    ``__v1n`` keys already carry the projection, and ``__dir`` is
+    validated (mixed-direction artifacts raise) and re-stamped — as
+    the empty string once every client is tombstoned, so the emptied
+    artifact stays in its family (round-15 advice)."""
+    w, direction = _resolve_artifact(
+        index, "rank_window_compact", empty_ok=True
+    )
     kept = index.join(
         F.broadcast(tombstones.selectExpr(
             f"{tombstones.columns[0]} AS __rid"
@@ -1688,7 +1627,7 @@ def rank_window_compact(
         F.lit(1).alias("__isc"),
     )
     ranked = _distributed_rank(u, index.sparkSession)
-    return _index_rows(ranked, w, dir_str)
+    return _index_rows(ranked, w, direction)
 
 
 def rank_window_insert(
@@ -1705,15 +1644,15 @@ def rank_window_insert(
     cell for this artifact (delete/compact: round 12 above; the IVF
     twin is ``ann_ivf_incremental_insert``).  Positions are
     corpus-relative, so unlike the IVF insert a bare union is wrong:
-    an arriving client shifts every position after its angle rank.
-    But the index already stores each row's full sort key
-    (``__v1n``, arm) — so the merge is: arm + angle-normalize ONLY
-    the arrivals, union with the stored slim rows, and re-run the
-    distributed dense rank.  The result equals
-    ``rank_window_index(old corpus ∪ arrivals, window=__w)`` EXACTLY
-    (rebuild-equivalence pytest; ``rank_window_insert_e2e`` pins the
-    probed serving under the full value oracle), at the cost of one
-    index scan + |arrivals| arming — never a corpus rescan.
+    an arriving client shifts every position after its rank.  But the
+    index already stores each row's full sort key (``__v1n``, arm) —
+    so the merge is: arm + key ONLY the arrivals, union with the
+    stored slim rows, and re-run the distributed dense rank.  The
+    result equals ``rank_window_index(old corpus ∪ arrivals,
+    window=__w)`` EXACTLY (rebuild-equivalence pytest;
+    ``rank_window_insert_e2e`` pins the probed serving under the full
+    value oracle), at the cost of one index scan + |arrivals| arming —
+    never a corpus rescan.
 
     The build window ``__w`` is KEPT: unlike deletion, inserts can
     RAISE the corpus' tie density, so a sustained-growth deployment
@@ -1721,7 +1660,7 @@ def rank_window_insert(
     need trajectory 15 → 16 → 78 → 364 across four decades — density
     grows with scale); intraday arrival volumes ride the ×2
     derivation pad.  Mixed-window unions still raise at probe time
-    (``_resolve_probe_window``).
+    (:func:`_resolve_artifact`).
 
     PRECONDITION — new ids only (round-13 advice): an arrival whose
     id already exists in the index would union a SECOND ``__rid`` row
@@ -1740,37 +1679,24 @@ def rank_window_insert(
     payloads for one id is an upstream bug (conflicting updates ride
     tombstone → compact → insert, like the IVF twin).
 
-    PROJECTION-family artifacts (round 14) insert through here too:
-    when the index carries ``__dir``, the arrivals' sort keys are
-    computed with THAT stored projection (validated, re-stamped) —
-    the direction travels with the artifact, so an insert can never
-    rank arrivals by a different key than the corpus was built on."""
-    w = _resolve_probe_window(index, None)
-    # ``direction`` is a FALLBACK for an EMPTIED __dir artifact only
-    # (round-15 advice): a non-empty index resolves — and VALIDATES
-    # the caller's value against — its own stored metadata, so an
-    # insert can never key arrivals differently than the corpus; an
-    # emptied artifact has nothing stored, and re-seeding it requires
-    # the caller to say which projection the family rides.
-    direction = (
-        _resolve_probe_direction(
-            index, direction, who="rank_window_insert"
-        )
-        if "__dir" in index.columns
-        else None
+    Projection-keyed artifacts (``__dir``) insert through here too:
+    the arrivals are keyed with the STORED direction (validated,
+    re-stamped), so an insert can never rank arrivals by a different
+    key than the corpus was built on.  ``direction`` is only needed to
+    re-seed an EMPTIED ``__dir`` artifact (round-15 advice), which has
+    nothing stored; on a non-empty artifact it is validated like the
+    probe's."""
+    w, direction = _resolve_artifact(
+        index, "rank_window_insert", direction=direction,
+        keyed=arrivals, vec_col=vec_col,
     )
-    if direction is None:
-        _require_dim2(arrivals, vec_col, "rank_window_insert(arrivals)")
-        key = None
-    else:
-        key = _projection_key(direction, vec_col)
     arrivals = arrivals.dropDuplicates([right_id]).join(
         index.select(F.col("__rid").alias(right_id)).distinct(),
         right_id,
         "left_anti",
     )
     new = _arm_clients(
-        arrivals, right_id, vec_col, naics_col, code_len, key_expr=key
+        arrivals, right_id, vec_col, naics_col, code_len, direction
     )
     old = index.select(
         F.col("__rid").alias("__id"), "__v1n", "__lvl", "__blk",
@@ -1779,128 +1705,7 @@ def rank_window_insert(
     ranked = _distributed_rank(
         old.unionByName(new), index.sparkSession
     )
-    return _index_rows(
-        ranked, w, None if direction is None else _direction_str(direction)
-    )
-
-
-def derive_projection_window_stats(
-    left: DataFrame,
-    right: DataFrame,
-    left_id: str,
-    right_id: str,
-    direction: list[float],
-    vec_col: str = "vec",
-    naics_col: str = "naics",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    k: int = 15,
-    threshold: float = 0.0,
-    w_hops: float = DEFAULT_W_HOPS,
-    w_havs: float = DEFAULT_W_HAVS,
-    sample_mod: int = 500,
-    code_len: int = CODE_LEN,
-    min_window: int = 64,
-    prev_window: int | None = None,
-    warm_sample_mod: int | None = None,
-) -> dict:
-    """STANDALONE window derivation for the PROJECTION family — the
-    general-dim twin of :func:`derive_rank_window_stats`, with the
-    within-arm sort key swapped for the fixed-``direction`` projection
-    (:func:`_projection_key`).  Same estimator: exact-score a
-    deterministic prospect sample against the corpus (one linear
-    |sample|·|R| blocked-kernel pass), read each true top-k pair's
-    minimum required window off a shared rank of the client corpus +
-    sampled prospects, pad ×2, round up the power-of-two ladder, floor
-    ``min_window``.  Consumers: :func:`projection_window_index` builds
-    (derive once at index time, stamp ``__w`` + ``__dir``) and the
-    kernel-vs-window DISPATCH (round-13 verdict #1), which compares
-    the derived window's predicted candidate volume against the exact
-    kernel's — see :func:`projection_window_wins`.
-
-    ``prev_window``/``warm_sample_mod`` warm-start the derivation from
-    the previous snapshot's window exactly like
-    :func:`derive_rank_window_stats` (see its docstring): a ~8×
-    smaller-sample pass first, keep ``prev_window`` when it suffices,
-    escalate to the full pass when the corpus drifted past it."""
-    spark = left.sparkSession
-    if prev_window is not None:
-        warm = derive_projection_window_stats(
-            left, right, left_id, right_id, direction,
-            vec_col=vec_col, naics_col=naics_col,
-            lat_col=lat_col, lon_col=lon_col,
-            k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
-            sample_mod=warm_sample_mod or sample_mod * 8,
-            code_len=code_len, min_window=min_window,
-        )
-        if warm["window"] <= prev_window:
-            return {
-                **warm,
-                "window": int(prev_window),
-                "warm_start": True,
-                "warm_window": warm["window"],
-            }
-        full = derive_projection_window_stats(
-            left, right, left_id, right_id, direction,
-            vec_col=vec_col, naics_col=naics_col,
-            lat_col=lat_col, lon_col=lon_col,
-            k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
-            sample_mod=sample_mod, code_len=code_len,
-            min_window=min_window,
-        )
-        return {
-            **full,
-            "warm_start": False,
-            "warm_window": warm["window"],
-        }
-    sample, n_sampled, used_mod = _derivation_sample(
-        left, left_id, sample_mod
-    )
-    key = _projection_key(direction, vec_col)
-    cli = _arm_clients(
-        right, right_id, vec_col, naics_col, code_len, key_expr=key
-    )
-    pro = _arm_prospects(
-        sample, left_id, vec_col, naics_col, code_len, key_expr=key
-    )
-
-    # rank build and calibration kernel overlap as concurrent driver
-    # jobs (guide §2.6); rank materialized for the stats job's two
-    # side projections (guide §2.4) — same shape as the rank twin
-    def _calibrate():
-        exact = _calibration_exact_topk(
-            sample, right, left_id, right_id,
-            vec_col=vec_col, naics_col=naics_col,
-            lat_col=lat_col, lon_col=lon_col,
-            k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
-        )
-        return exact.select(
-            F.col(left_id).alias("__tid"), F.col(right_id).alias("__rid")
-        ).localCheckpoint()
-
-    ranked, pairs = _rank_overlapping_calibration(
-        spark, cli.unionByName(pro), _calibrate
-    )
-    clis_base = ranked.filter(F.col("__isc") == 1).select(
-        F.col("__id").alias("__rid"),
-        "__lvl",
-        "__blk",
-        F.col("__pos").alias("__cpos"),
-    )
-    pros_ins = ranked.filter(F.col("__isc") == 0).select(
-        F.col("__id").alias("__tid"),
-        "__lvl",
-        "__blk",
-        F.col("__pos").alias("__ins"),
-    )
-    n_pairs, mx = _needed_window_stats(pairs, pros_ins, clis_base)
-    return {
-        "n_sampled": n_sampled,
-        "n_pairs": n_pairs,
-        "max_needed": mx,
-        "window": _ladder_window(max(min_window, 2 * (mx or 0))),
-        "sample_mod": used_mod,
-    }
+    return _index_rows(ranked, w, direction)
 
 
 #: Measured per-candidate cost ratio of the projection-window path vs
@@ -1923,8 +1728,8 @@ def derive_projection_window_stats(
 #: BATCH-path constant: both sides of the batch dispatch run the same
 #: scoring over different candidate volumes, so the ratio captures
 #: the candidate-generation machinery (rank shuffle + fetch join +
-#: distinct) per emitted pair.  Re-measure via
-#: scripts/measure_fulldim_r14.py if the candidate fetch plan, the
+#: distinct) per emitted pair.  Re-measure (window path vs kernel on
+#: one input, as in those appendices) if the candidate fetch plan, the
 #: re-rank path, or the kernel blocking changes; the serving-side
 #: twin (which has DIFFERENT overhead shape) is the separate
 #: interpolated rule in :func:`serving_cost_ratio` below.  The flip
@@ -2077,10 +1882,11 @@ def serve_batch(
     measured cost rule (:func:`serving_probe_wins`) instead of leaving
     the crossover as deployment prose — the serving twin of the batch
     query's :func:`projection_window_wins` dispatch (round-14 verdict
-    #1).  Family (2-D rank window vs ``__dir`` projection) and build
-    metadata are resolved off the artifact exactly like the probes do;
-    ``clients`` is the feature relation the artifact was built from
-    (ideally the PUBLISHED feature snapshot — see
+    #1).  The build window and key (2-D angle or ``__dir``
+    projection) are resolved off the artifact ONCE
+    (:func:`_resolve_artifact`) and the batch is dim-checked against
+    that key; ``clients`` is the feature relation the artifact was
+    built from (ideally the PUBLISHED feature snapshot — see
     ``publish_versioned(companions=...)``), used by the probe route's
     exact re-rank and by the kernel route's scoring.
 
@@ -2092,10 +1898,10 @@ def serve_batch(
     Routes, both returning ``(left_id, right_id, score)`` top-K:
 
     - PROBE (wins on clustered windows / modest corpora): fetch
-      candidate pairs from the artifact
-      (:func:`rank_window_probe` / the projection twin), exact-score
-      them (:func:`hybrid_topk_pruned`) at the family's dim —
-      tombstones anti-joined at pair level, the probe contract.
+      candidate pairs from the artifact (the :func:`rank_window_probe`
+      body), exact-score them (:func:`hybrid_topk_pruned`) at the
+      key's dim — tombstones anti-joined at pair level, the probe
+      contract.
     - KERNEL (wins when the derived window stops pruning): the exact
       blocked-GEMM :func:`hybrid_topk` of the batch against the LIVE
       clients (tombstones anti-joined at the relation level — the
@@ -2108,32 +1914,9 @@ def serve_batch(
     — which is what lets ``peer_search_serve_batch_e2e`` pin either
     route under one value oracle.  Reference anchor: the blocked
     batching intent at search_ranking_peers.py:489-494."""
-    if "__dir" in index.columns:
-        direction = _resolve_probe_direction(index, None, who="serve_batch")
-        stripped = index.drop("__dir")
-        window = _resolve_probe_window(stripped, None)
-        dim: int | None = len(direction)
-
-        def _probe() -> DataFrame:
-            return _projection_probe_resolved(
-                batch, stripped, left_id, right_id, direction, window,
-                vec_col, naics_col, code_len, tombstones,
-                broadcast_probes=broadcast_probes,
-            )
-
-    else:
-        _require_dim2(batch, vec_col, "serve_batch(batch)")
-        window = _resolve_probe_window(index, None)
-        dim = 2
-
-        def _probe() -> DataFrame:
-            return rank_window_probe(
-                batch, index, left_id, right_id,
-                vec_col=vec_col, naics_col=naics_col, window=window,
-                code_len=code_len, tombstones=tombstones,
-                broadcast_probes=broadcast_probes,
-            )
-
+    window, direction = _resolve_artifact(
+        index, "serve_batch", keyed=batch, vec_col=vec_col
+    )
     if n_right is None:
         n_right = clients.count()
     if serving_probe_wins(window, n_right, code_len=code_len):
@@ -2142,7 +1925,12 @@ def serve_batch(
             vec_col=vec_col, naics_col=naics_col,
             lat_col=lat_col, lon_col=lon_col,
             k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
-            candidates=_probe(), dim=dim,
+            candidates=_probe_resolved(
+                batch, index, left_id, right_id, window, direction,
+                vec_col, naics_col, code_len, tombstones,
+                broadcast_probes=broadcast_probes,
+            ),
+            dim=_key_dim(direction),
             broadcast_sides=broadcast_probes,
         )
     live = (
@@ -2160,475 +1948,6 @@ def serve_batch(
     )
 
 
-def projection_window_index(
-    right: DataFrame,
-    right_id: str,
-    direction: list[float],
-    vec_col: str = "vec",
-    naics_col: str = "naics",
-    window: int | None = None,
-    code_len: int = CODE_LEN,
-    calibration: DataFrame | None = None,
-    calibration_id: str | None = None,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    k: int = 15,
-    threshold: float = 0.0,
-    w_hops: float = DEFAULT_W_HOPS,
-    w_havs: float = DEFAULT_W_HAVS,
-    sample_mod: int = 500,
-    min_window: int = 64,
-    prev_window: int | None = None,
-) -> DataFrame:
-    """Nightly-buildable serving artifact for the GENERAL-DIM
-    projection-window peer search (round-13 verdict #2) — the
-    :func:`rank_window_index` twin with the 2-D angle key swapped for
-    the fixed-``direction`` projection: one distributed rank of the
-    client corpus per arm, positions dense per (lvl, blk), ``__wb``
-    window blocks, and BOTH build parameters stamped as metadata
-    columns — ``__w`` (the window, as in the 2-D artifact) and
-    ``__dir`` (the projection direction, canonical string form).  A
-    probe with a mismatched window OR direction raises instead of
-    silently fetching wrong neighborhoods; compaction and insert read
-    both off the artifact, so the full CRUD lifecycle
-    (:func:`rank_window_compact` / :func:`rank_window_insert` — they
-    dispatch on the metadata) and the versioned-publish / hot-swap
-    machinery apply unchanged.
-
-    ``window=None`` derives the build window at index time from a
-    ``calibration`` prospect frame
-    (:func:`derive_projection_window_stats`) — same nightly story as
-    the 2-D artifact; ``prev_window`` (yesterday's ``__w``)
-    warm-starts it, re-paying the full calibration kernel only when
-    the corpus drifted past the previous window.  Scale:
-    (code_len+1)·|R| slim rows; write
-    partitioned by ``__lvl`` like the 2-D artifact (NOT by ``__blk``
-    — the global arm's empty-string block id round-trips as NULL in
-    Hive-style paths)."""
-    spark = right.sparkSession
-    if window is None:
-        if calibration is None or calibration_id is None:
-            raise ValueError(
-                "projection_window_index: window=None derives the "
-                "build window from the data — pass calibration= and "
-                "calibration_id=, or an explicit window."
-            )
-        window = derive_projection_window_stats(
-            calibration, right, calibration_id, right_id, direction,
-            vec_col=vec_col, naics_col=naics_col,
-            lat_col=lat_col, lon_col=lon_col,
-            k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
-            sample_mod=sample_mod, code_len=code_len,
-            min_window=min_window, prev_window=prev_window,
-        )["window"]
-    key = _projection_key(direction, vec_col)
-    cli = _arm_clients(
-        right, right_id, vec_col, naics_col, code_len, key_expr=key
-    )
-    ranked = _distributed_rank(cli, spark)
-    return _index_rows(ranked, window, _direction_str(direction))
-
-
-def _resolve_probe_direction(
-    index: DataFrame,
-    direction: list[float] | None,
-    who: str = "projection_window_probe",
-    empty_ok: bool = False,
-) -> list[float] | None:
-    """Direction the probe MUST use = the direction the index was
-    ranked by — the ``__dir`` twin of :func:`_resolve_probe_window`:
-    reads the metadata (min == max or the artifact holds MIXED builds
-    → raise), returns the stored direction when ``direction=None``,
-    validates equality when explicit (mismatch raises — probing with
-    a different projection silently fetches wrong neighborhoods).
-
-    ``who`` names the calling operator in every error (round-15
-    advice — compact/insert raised errors blaming the probe).  An
-    EMPTY ``__dir`` index (e.g. fully tombstoned) resolves to the
-    caller's ``direction`` when one was passed; with ``empty_ok=True``
-    it degrades to ``None`` instead of raising — compaction uses this
-    to stay graceful on an emptied artifact, mirroring
-    :func:`_resolve_probe_window`'s empty-index default."""
-    if "__dir" not in index.columns:
-        raise ValueError(
-            f"{who}: index carries no __dir metadata "
-            "— it is a 2-D rank-window artifact; probe it with "
-            "rank_window_probe."
-        )
-    row = index.agg(
-        F.min("__dir").alias("lo"), F.max("__dir").alias("hi")
-    ).first()
-    if row is None or row["lo"] is None:
-        # empty index: any direction yields the empty result
-        if direction is not None:
-            return [float(w) for w in direction]
-        if empty_ok:
-            return None
-        raise ValueError(
-            f"{who}: the index is EMPTY and no "
-            "direction was passed — prospect/arrival keys cannot be "
-            "computed; pass direction= explicitly."
-        )
-    if row["lo"] != row["hi"]:
-        raise ValueError(
-            f"{who}: index holds MIXED projection "
-            f"directions ({row['lo']!r} vs {row['hi']!r}) — e.g. a "
-            "rebuild under a new direction appended over an old "
-            "artifact. Rebuild the index path cleanly."
-        )
-    stored = _parse_direction(row["lo"])
-    if direction is not None and [float(w) for w in direction] != stored:
-        raise ValueError(
-            f"{who}: direction={list(direction)} "
-            f"does not match the index's build direction {stored} — "
-            "probing with a mismatched projection silently fetches "
-            "wrong neighborhoods. Pass direction=None to use the "
-            "index's."
-        )
-    return stored
-
-
-def projection_window_probe(
-    left: DataFrame,
-    index: DataFrame,
-    left_id: str,
-    right_id: str,
-    vec_col: str = "vec",
-    naics_col: str = "naics",
-    window: int | None = None,
-    direction: list[float] | None = None,
-    code_len: int = CODE_LEN,
-    tombstones: DataFrame | None = None,
-    broadcast_probes: bool = True,
-) -> DataFrame:
-    """Probe a :func:`projection_window_index` with a prospect batch —
-    the general-dim twin of :func:`rank_window_probe`, sharing its
-    entire fetch body (:func:`_probe_fetch`: broadcast block-summary
-    insertion arithmetic, ≤3 window blocks + one straddling partial
-    count per (prospect, arm), tombstone anti-join, per-row
-    independent so batch splitting and streaming micro-batches change
-    nothing).  Candidate parity with the batch
-    :func:`projection_window_candidates` at the build window is
-    pytest-pinned; the registered ``peer_search_fulldim_probe_parity``
-    query pins the probed serving result under the full value oracle.
-
-    BOTH build parameters are read off the artifact by default
-    (``window=None`` → ``__w``, ``direction=None`` → ``__dir``);
-    explicit values are VALIDATED against the metadata and a mismatch
-    raises — the round-13 verdict's 'mismatched-direction probes
-    raise' contract.
-
-    WHEN to serve through this artifact is a measured cost rule, not
-    a hope (SCALE.md round-14 appendices, sf1 + sf10): at sf1 a
-    1k-prospect probe beats the exact kernel on the same batch ~2.3×
-    (55s vs ~127s); at sf10 the derived window has grown to 16384 and
-    the kernel edges ahead (382s vs ~330s).  On uniform geometry at
-    decade scale, compare fetched-pair volume (levels·2·__w·|batch|)
-    against kernel pairs (|batch|·|corpus|) at the two measured
-    throughputs before choosing the serving path; clustered
-    geometries (small derived windows) and small trickle batches stay
-    firmly in the artifact's domain — the streaming micro-batch
-    regime it serves."""
-    direction = _resolve_probe_direction(index, direction)
-    window = _resolve_probe_window(index.drop("__dir"), window)
-    return _projection_probe_resolved(
-        left, index.drop("__dir"), left_id, right_id, direction, window,
-        vec_col, naics_col, code_len, tombstones,
-        broadcast_probes=broadcast_probes,
-    )
-
-
-def _projection_probe_resolved(
-    left: DataFrame,
-    index: DataFrame,
-    left_id: str,
-    right_id: str,
-    direction: list[float],
-    window: int,
-    vec_col: str = "vec",
-    naics_col: str = "naics",
-    code_len: int = CODE_LEN,
-    tombstones: DataFrame | None = None,
-    broadcast_probes: bool = True,
-) -> DataFrame:
-    """Probe body AFTER metadata resolution — for the streaming loops,
-    which validate ``__w``/``__dir`` ONCE at start (or per published
-    version) and must not re-run the metadata agg jobs every
-    micro-batch (the 2-D loop's ``__w``-strip pattern, extended to the
-    direction)."""
-    pro = _arm_prospects(
-        left, left_id, vec_col, naics_col, code_len,
-        key_expr=_projection_key(direction, vec_col),
-    )
-    return _probe_fetch(
-        pro, index, window, left_id, right_id, tombstones,
-        broadcast_probes=broadcast_probes,
-    )
-
-
-def projection_window_candidates(
-    left: DataFrame,
-    right: DataFrame,
-    left_id: str,
-    right_id: str,
-    direction: list[float],
-    vec_col: str = "vec",
-    naics_col: str = "naics",
-    window: int | None = 256,
-    code_len: int = CODE_LEN,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    k: int = 15,
-    threshold: float = 0.0,
-    w_hops: float = DEFAULT_W_HOPS,
-    w_havs: float = DEFAULT_W_HAVS,
-    sample_mod: int = 500,
-    min_window: int = 64,
-    window_cache: dict | None = None,
-    cache_key=None,
-) -> DataFrame:
-    """The rank-window candidate generator at ANY dimension: sort
-    each NAICS-level arm by the vectors' PROJECTION onto a fixed
-    ``direction`` instead of the 2-D angle proxy, and fetch each
-    prospect's ±window sorted neighborhood — same distributed-rank /
-    window-fetch machinery (``_distributed_rank``, ``_window_fetch``),
-    same linear O(|L|·levels·2·window) candidate volume.
-
-    In 2-D non-negative space the angle order makes this EXACT; at
-    higher dims a single projection is lossy (two vectors can share a
-    projection while differing in the complement), so this arm is an
-    APPROXIMATE candidate source whose recall is measured, and the
-    production full-dim query UNIONS it with ``ivf_block_candidates``
-    — complementary failure modes: the projection window owns the
-    along-manifold neighbors that sampled-centroid IVF mis-buckets on
-    concentrated all-positive geometries (measured round 13: IVF
-    alone plateaued at ~0.998 recall at sf0.1 — boundary clients'
-    lists rank ~29/33 in the prospect's centroid order — while the
-    union reaches 1.0), and IVF owns pairs split across the
-    projection's level sets.
-
-    ``direction`` must be FIXED LITERALS (e.g. the reference's
-    feature-weight profile, search_ranking_peers.py:442,608-611) so
-    the projection is per-row deterministic and the SQL oracle
-    replays it bit-for-bit — a data-derived direction (corpus mean /
-    top principal axis) would ride a nondeterministically-ordered
-    aggregation and flip ULP ties across engines.
-
-    ``window=None`` DERIVES the window from the data with the same
-    estimator as ``rank_window_candidates`` (deterministic prospect
-    sample exact-scored against the corpus, per-pair min-need read
-    off the shared rank, ×2 pad, power-of-two ladder, floor
-    ``min_window``; ``window_cache``/``cache_key`` memoize per
-    snapshot).  Measured 9-D need (SCALE.md round-13): max-need
-    96 → 133 → 1305 at sf0.01/0.1/1 — the window GROWS roughly with
-    the corpus' projection-shadow density, so on near-uniform
-    high-dim data this path is a measured-knob approximation whose
-    candidate volume must be re-derived per corpus, not a fixed
-    linear bound; the exact blocked GEMM kernel (``hybrid_topk``)
-    remains the general-dim exact fallback, and clustered real-world
-    corpora are where the window (and the IVF arm) pay off."""
-    key = _projection_key(direction, vec_col)
-    if (
-        window is None
-        and window_cache is not None
-        and cache_key in window_cache
-    ):
-        window = int(window_cache[cache_key])
-    cli = _arm_clients(right, right_id, vec_col, naics_col, code_len, key_expr=key)
-    pro = _arm_prospects(left, left_id, vec_col, naics_col, code_len, key_expr=key)
-    u = cli.unionByName(pro)
-    spark = left.sparkSession
-    if window is None:
-        # COLD derivation: rank and calibration overlap as concurrent
-        # driver jobs, rank materialized for its 3 consumers — same
-        # shape as rank_window_candidates (guide §2.6 / §2.4).
-        def _calibrate():
-            sample, n_sampled, _ = _derivation_sample(
-                left, left_id, sample_mod
-            )
-            if not n_sampled:
-                return None  # empty left: any window yields empty
-            exact = _calibration_exact_topk(
-                sample, right, left_id, right_id,
-                vec_col=vec_col, naics_col=naics_col,
-                lat_col=lat_col, lon_col=lon_col,
-                k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
-            )
-            return exact.select(
-                F.col(left_id).alias("__tid"), F.col(right_id).alias("__rid")
-            ).localCheckpoint()
-
-        ranked, pairs = _rank_overlapping_calibration(spark, u, _calibrate)
-    else:
-        # warm path (window known): the rank's two consumers sit in ONE
-        # job (both sides of the window-fetch), whose subtrees execute
-        # as parallel stages off the checkpointed layout — an eager
-        # materialization pass here would SERIALIZE that (measured
-        # +0.3-0.5s at sf0.1), so only the cold path materializes
-        ranked, pairs = _distributed_rank(u, spark), None
-    clis_base = ranked.filter(F.col("__isc") == 1).select(
-        F.col("__id").alias("__rid"),
-        "__lvl",
-        "__blk",
-        F.col("__pos").alias("__cpos"),
-    )
-    pros_ins = ranked.filter(F.col("__isc") == 0).select(
-        F.col("__id").alias("__tid"),
-        "__lvl",
-        "__blk",
-        F.col("__pos").alias("__ins"),
-    )
-    if window is None:
-        if pairs is not None:
-            _, mx = _needed_window_stats(pairs, pros_ins, clis_base)
-        else:
-            mx = None
-        window = _ladder_window(max(min_window, 2 * (mx or 0)))
-        if window_cache is not None:
-            window_cache[cache_key] = int(window)
-    clis_pos = clis_base.withColumn(
-        "__wb", F.floor((F.col("__cpos") - 1) / window)
-    )
-    return _window_fetch(pros_ins, clis_pos, window, left_id, right_id)
-
-
-def ivf_block_candidates(
-    left: DataFrame,
-    right: DataFrame,
-    left_id: str,
-    right_id: str,
-    centroids: DataFrame,
-    vec_col: str = "vec",
-    naics_col: str = "naics",
-    n_probe: int = 8,
-    assign_probe: int = 1,
-    code_len: int = CODE_LEN,
-) -> DataFrame:
-    """BLOCK-AWARE multi-probe IVF candidates for the hybrid peer
-    search at ANY vector dimension — the round-13 generalization of
-    the 2-D ``rank_window_candidates`` (which is exact but relies on
-    the angle order that only exists in 2-D; hybrid.py raises on
-    dim≠2 there).  Returns candidate ``(left_id, right_id)`` pairs
-    for ``hybrid_topk_pruned(candidates=...)`` exact re-ranking.
-
-    Why per-LEVEL probing: the hybrid score
-    ``w_cos·cos + w_hops·hops + w_havs·havs``
-    (search_ranking_peers.py:310-312) is cosine-monotone WITHIN a
-    NAICS prefix level (hops constant there, w_havs ≈ 0), so the true
-    top-k decomposes into per-level cosine top-k's — the same
-    decomposition the rank-window index uses.  A purely global probe
-    would miss high-hops pairs whose cosine rank is deep; per level,
-    each prospect probes its ``n_probe`` nearest lists AMONG THE
-    LISTS ITS BLOCK OCCUPIES, so small deep blocks are probed as
-    densely as the global arm.
-
-    Plan shape (fully declarative, SQL-replayable):
-    1. clients → single nearest list (``ivf_assign`` n_probe=1 — the
-       nightly IVF artifact's assignment) and 7 slim arm rows
-       (level, prefix, list, id);
-    2. prospects → cosine vs the BROADCAST centroid table (|L|·nlist
-       slim rows — the assignment pass every IVF build already pays);
-    3. per (prospect, level): rank the block-occupied lists by the
-       prospect's centroid cosine, keep ``n_probe``;
-    4. equi-join arms on (level, prefix, list) → distinct pairs.
-
-    Scale: candidates ≈ |L|·levels·n_probe·(N/nlist) ≈
-    |L|·levels·n_probe·√N at the ``ivf_auto_centroids`` density —
-    SUB-quadratic (the exact kernel is |L|·N) with n_probe the
-    recall knob; every join is a bounded-key equi-join, the only
-    broadcast is the √N-row centroid table, and the arm/score frames
-    are slim (no vectors travel past step 2).  MEASURED recall on
-    the reference's 9-dim recipe (SCALE.md round-13): 1.0000 at
-    sf0.01 (n_probe 16) but a plateau at 0.9977 (sf0.1) / 0.7962
-    (sf1) — on that all-positive, one-dominant-dimension geometry,
-    cosine concentrates and sampled-centroid cells interleave, so
-    the prospect's centroid order is a weak proxy for where its
-    neighbors live (missed pairs had cos ≥ 0.989 with their list
-    ranked 29/33 for the prospect; ``assign_probe=2`` does not move
-    it).  The production full-dim query therefore rides
-    ``projection_window_candidates``; this arm serves clustered
-    multi-modal geometries (where IVF shines — see the ANN suite)
-    and unions with the window arm when either is insufficient
-    (union recall 1.0000 at sf0.1)."""
-    arms = lambda df, id_col: df.select(  # noqa: E731
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(lv).alias("__lvl"),
-                        (
-                            F.lit("")
-                            if lv == 0
-                            else F.substring(F.col(naics_col), 1, lv)
-                        ).alias("__blk"),
-                    )
-                    for lv in range(0, code_len + 1)
-                ]
-            )
-        ).alias("__a"),
-    ).select(
-        id_col,
-        F.col("__a.__lvl").alias("__lvl"),
-        F.col("__a.__blk").alias("__blk"),
-    )
-    # ``assign_probe`` > 1 = client MULTI-ASSIGNMENT (each client rides
-    # its k nearest lists): the standard boundary fix — a client on a
-    # Voronoi edge is reachable from either side's probes — at
-    # < assign_probe× candidate volume (only boundary fetches
-    # duplicate, and the pair set dedups).  NOT monotone at fixed
-    # n_probe (pytest-pinned): the extra copies also enrich each
-    # block's occupied-list pool, so a newly-occupied list can
-    # DISPLACE a previously-probed one from the prospect's top-n_probe
-    # ranking; supersetting is guaranteed only when n_probe covers the
-    # occupied pool.  Net recall effect is empirical — measured flat
-    # (0.9977 → 0.9977) on the fulldim recipe at sf0.1.
-    r_assign = ivf_assign(
-        right.select(F.col(right_id), F.col(vec_col).alias("__v")),
-        right_id,
-        "__v",
-        centroids,
-        n_probe=assign_probe,
-        list_col="__list",
-    )
-    carm = arms(right, right_id).join(r_assign, right_id)
-    block_lists = carm.select("__lvl", "__blk", "__list").distinct()
-    # prospect × centroid cosine — same formulation as ivf_assign's
-    # HOF path (dot / (|q|·|c|)), so the oracle replays it term for
-    # term with the identical left-assoc folds
-    q = left.select(
-        F.col(left_id), F.col(vec_col).cast("array<double>").alias("__qv")
-    )
-    c = centroids.select(
-        F.col("centroid_id").alias("__list"),
-        F.col("vec").cast("array<double>").alias("__cv"),
-    )
-    qn = F.sqrt(F.aggregate("__qv", F.lit(0.0), lambda a, x: a + x * x))
-    cn = F.sqrt(F.aggregate("__cv", F.lit(0.0), lambda a, x: a + x * x))
-    dot = F.aggregate(
-        F.zip_with("__qv", "__cv", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    scores = q.crossJoin(F.broadcast(c)).select(
-        left_id, "__list", (dot / (qn * cn)).alias("__csim")
-    )
-    probe_pool = arms(left, left_id).join(block_lists, ["__lvl", "__blk"]).join(
-        scores, [left_id, "__list"]
-    )
-    probed = windowed_topk(
-        probe_pool,
-        [left_id, "__lvl"],
-        [F.col("__csim").desc(), F.col("__list")],
-        n_probe,
-    ).select(left_id, "__lvl", "__blk", "__list")
-    return (
-        probed.join(carm, ["__lvl", "__blk", "__list"])
-        .select(left_id, right_id)
-        .distinct()
-    )
-
-
 def hybrid_topk_pruned(
     left: DataFrame,
     right: DataFrame,
@@ -2642,19 +1961,21 @@ def hybrid_topk_pruned(
     threshold: float = 0.0,
     w_hops: float = DEFAULT_W_HOPS,
     w_havs: float = DEFAULT_W_HAVS,
-    tables: list[list[list[float]]] | None = None,
-    naics_prefix_len: int = 4,
-    candidates: DataFrame | None = None,
-    quantile_buckets: int | None = None,
+    *,
+    candidates: DataFrame,
     dim: int | None = None,
     broadcast_sides: bool = False,
 ) -> DataFrame:
     """Candidate-pruned hybrid top-K: exact hybrid scoring (same
-    formula as ``hybrid_topk``) restricted to candidate pairs; the
-    O(L×R) score matrix never exists.  Top-K is per left row over the
-    candidate set, so results match the exact kernel whenever every
-    true top-k pair is a candidate (recall is measured by the
-    ``peer_search_pruned_recall`` query).
+    formula as ``hybrid_topk``) restricted to the ``candidates``
+    ``(left_id, right_id)`` pairs; the O(L×R) score matrix never
+    exists.  Top-K is per left row over the candidate set, so results
+    match the exact kernel whenever every true top-k pair is a
+    candidate — the production sources are
+    :func:`rank_window_candidates` (batch; linear in the left side)
+    and :func:`rank_window_probe` (serving), whose recall the
+    registered ``peer_search_fulldim_recall`` query measures for the
+    general-dim key.  ``dim=`` takes the unrolled codegen dot.
 
     ``broadcast_sides`` (the SERVING-path re-rank, round 15): hint
     both feature sides broadcast so the CANDIDATE frame — always the
@@ -2672,23 +1993,8 @@ def hybrid_topk_pruned(
     where the left relation is corpus-sized and the shuffle join is
     the right plan.
 
-    Candidate source matters at scale: the default
-    ``hybrid_candidates`` (NAICS-block ∪ quantile-bucket arms) is a
-    CONSTANT-FACTOR prune — measured at sf1 it was slower than the
-    exact kernel (672s vs ~170-205s; SCALE.md round-9 appendix).  The
-    production path passes ``candidates=rank_window_candidates(...)``
-    (linear in the left side) and ``dim=`` for the unrolled codegen
-    dot; the default is kept as the documented negative result and
-    for the recall query's replay.
-
     Fully declarative scoring (dot + when-ladder hops + native-trig
     haversine) — whole-stage codegen, SQL-oracle-able."""
-    if candidates is None:
-        candidates = hybrid_candidates(
-            left, right, left_id, right_id, vec_col, naics_col,
-            tables=tables, naics_prefix_len=naics_prefix_len,
-            quantile_buckets=quantile_buckets,
-        )
     lhs = left.select(
         F.col(left_id),
         F.col(vec_col).alias("__lvec"),

@@ -10,17 +10,6 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
-#: Documented NEGATIVE RESULTS (round-12 verdict #3): queries kept
-#: runnable + value-oracled for replay, but EXCLUDED from the driver
-#: registry and the per-round sweeps — each is a measured dead end
-#: whose lesson is recorded (docstring + SCALE.md), not a production
-#: path, and re-verifying it every round buys nothing at real sweep
-#: cost.  Replay manually:
-#:   from prod_recommendation_pyspark_spark.queries.registry import (
-#:       NEGATIVE_RESULTS, NEGATIVE_ORACLES)
-NEGATIVE_RESULTS: dict[str, QueryFn] = {}
-NEGATIVE_ORACLES: dict[str, str] = {}
-
 #: Sweep-economics tier (round-13 verdict #7): the registry's full
 #: sf0.1 sweep grows linearly with every round's additions (r13:
 #: 230 queries, 888s).  Queries here are the measured long tail
@@ -64,12 +53,10 @@ def release_session_caches(spark: SparkSession) -> None:
     spark.catalog.clearCache()
 
 
-def register(name: str, sql: str | None = None, negative_result: bool = False):
+def register(name: str, sql: str | None = None):
     """Register a query; ``sql`` is the DuckDB oracle (omit for
     non-SQL-expressible operators — the driver then records a weaker
-    rows-only check).  ``negative_result=True`` files the query under
-    ``NEGATIVE_RESULTS`` instead of the driver registry — see that
-    dict's docstring.
+    rows-only check).
 
     The registered callable is wrapped to call
     ``release_session_caches`` on entry — see that function's
@@ -84,14 +71,9 @@ def register(name: str, sql: str | None = None, negative_result: bool = False):
             release_session_caches(spark)
             return fn(spark, sf_dir)
 
-        q, o = (
-            (NEGATIVE_RESULTS, NEGATIVE_ORACLES)
-            if negative_result
-            else (QUERIES, ORACLES)
-        )
-        q[name] = wrapped
+        QUERIES[name] = wrapped
         if sql is not None:
-            o[name] = sql
+            ORACLES[name] = sql
         # return the UNwrapped fn: direct imports (tests, composition)
         # keep plain semantics; only registry-dispatched runs clear
         return fn

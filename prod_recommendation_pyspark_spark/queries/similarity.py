@@ -13,7 +13,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from prod_recommendation_pyspark_spark.operators.hybrid import hybrid_topk
+from prod_recommendation_pyspark_spark.operators.hybrid import (
+    hybrid_topk,
+    hybrid_topk_pruned,
+)
 from prod_recommendation_pyspark_spark.operators.similarity import (
     cosine_topk,
     cosine_topk_crossjoin,
@@ -957,222 +960,10 @@ def ann_ivf_update_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("tgt_id", "nbr_id")
 
 
-# ---------------------------------------------------------------------------
-# Candidate-pruned peer search (VERDICT r2 #1): NAICS blocking ∪ equi-depth
-# quantile blocking on the angle proxy (round-7 replacement for the sign-LSH
-# arm — 2-D all-positive vectors collapse sign-LSH into a handful of giant
-# buckets: measured 19.2M of 20.25M pairs "pruned" at sf0.1, i.e. no
-# pruning; the quantile arm measures 2.87M candidates at recall 1.0000)
-# ---------------------------------------------------------------------------
-
-from prod_recommendation_pyspark_spark.operators.hybrid import (  # noqa: E402
-    hybrid_topk_pruned,
-)
-
-_PRUNE_QBUCKETS, _PRUNE_PREFIX = 64, 4
-
-
-def _pruned_cte() -> str:
-    """Shared CTE chain computing the pruned top-K in ANSI SQL:
-    firmographics → prospect/client split → candidates (4-digit NAICS
-    block ∪ equi-depth angle-proxy bucket ±1) → exact hybrid score on
-    candidates → per-prospect top-15.
-
-    The bucket value replays Spark's expression exactly —
-    ``v1 / sqrt(v0·v0 + v1·v1)`` (the re-normalization is deliberate:
-    identical correctly-rounded IEEE ops on identical inputs give
-    bit-identical bucket keys), splits are exact ``quantile_cont``
-    (bit-parity with Spark ``percentile`` verified), and the ±1
-    neighbor probe absorbs any residual boundary placement."""
-    b = _PRUNE_QBUCKETS
-    qlist = ", ".join(str(i / b) for i in range(1, b))
-    return f"""
-    varr AS (SELECT c_custkey, c_name, naics, lat, lon, v0, v1, [v0, v1] AS v,
-                    v1 / sqrt(v0 * v0 + v1 * v1) AS v1n
-             FROM normed),
-    pros AS (SELECT * FROM varr WHERE c_custkey % 10 = 0),
-    clis AS (SELECT * FROM varr WHERE c_custkey % 10 <> 0),
-    qsplit AS (SELECT quantile_cont(v1n, [{qlist}]) AS s FROM clis),
-    cqb AS (SELECT c_custkey, len(list_filter(q.s, x -> x <= v1n)) AS qb
-            FROM clis CROSS JOIN qsplit q),
-    pqb AS (SELECT c_custkey, qb + d.d AS qb
-            FROM (SELECT c_custkey,
-                         len(list_filter(q.s, x -> x <= v1n)) AS qb
-                  FROM pros CROSS JOIN qsplit q) p
-            CROSS JOIN (SELECT unnest([-1, 0, 1]) AS d) d),
-    cand AS (
-        SELECT DISTINCT tgt, src FROM (
-            SELECT l.c_custkey AS tgt, r.c_custkey AS src
-            FROM pros l JOIN clis r
-              ON substring(l.naics, 1, {_PRUNE_PREFIX}) = substring(r.naics, 1, {_PRUNE_PREFIX})
-            UNION ALL
-            SELECT p.c_custkey AS tgt, c.c_custkey AS src
-            FROM pqb p JOIN cqb c USING (qb)
-        )),
-    pruned_scored AS (
-        SELECT cand.tgt AS tgt_custkey, cand.src AS src_custkey,
-               CAST(0.6 AS DOUBLE) * (l.v0 * r.v0 + l.v1 * r.v1)
-               + CAST(0.399 AS DOUBLE) * ({_HOPS_SQL})
-               + CAST(0.001 AS DOUBLE) * ({_HAVS_SQL}) AS score
-        FROM cand JOIN varr l ON cand.tgt = l.c_custkey
-                  JOIN varr r ON cand.src = r.c_custkey),
-    pruned_ranked AS (
-        SELECT tgt_custkey, src_custkey, score,
-               row_number() OVER (PARTITION BY tgt_custkey
-                                  ORDER BY score DESC, src_custkey) AS rn
-        FROM pruned_scored WHERE score >= 0.0)
-"""
-
-
-def _pruned_spark(spark: SparkSession, sf_dir: str):
-    firmo = _firmographics(spark, sf_dir)
-    prospects = firmo.filter(F.col("c_custkey") % 10 == 0).select(
-        F.col("c_custkey").alias("tgt_custkey"), "vec", "naics", "lat", "lon"
-    )
-    clients = firmo.filter(F.col("c_custkey") % 10 != 0).select(
-        F.col("c_custkey").alias("src_custkey"), "vec", "naics", "lat", "lon"
-    )
-    return hybrid_topk_pruned(
-        prospects,
-        clients,
-        "tgt_custkey",
-        "src_custkey",
-        vec_col="vec",
-        naics_col="naics",
-        lat_col="lat",
-        lon_col="lon",
-        k=TOPK_PEERS,
-        threshold=THRESHOLD,
-        w_hops=W_HOPS,
-        w_havs=W_HAVS,
-        tables=[],
-        naics_prefix_len=_PRUNE_PREFIX,
-        quantile_buckets=_PRUNE_QBUCKETS,
-    )
-
-
-@register(
-    "peer_search_hybrid_topk_pruned",
-    sql=f"""
-    WITH {_FIRMO_SQL},
-    {_pruned_cte()}
-    SELECT tgt_custkey, src_custkey, round(score, 4) AS score
-    FROM pruned_ranked WHERE rn <= 15
-    ORDER BY tgt_custkey, src_custkey
-    """,
-    negative_result=True,
-)
-def peer_search_hybrid_topk_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stage-1 peer search via the round-7 block/bucket prune:
-    candidate pairs from a 4-digit industry-prefix block join ∪
-    equi-depth quantile blocking on the normalized angle proxy (64
-    exact-percentile buckets, prospects probing bucket ±1), exact
-    hybrid scoring on candidates only, per-prospect top-15.  Measured
-    at sf0.1: 2.87M candidates of 20.25M possible (7× prune) at
-    recall 1.0000.
-
-    A DOCUMENTED NEGATIVE RESULT for scale (round 9), DEREGISTERED
-    from the driver registry in round 13 (verdict #3): both arms are
-    constant-factor prunes (the full 4-digit block product is
-    pairs/10 on this data; fixed 64 buckets are 3·pairs/64), so
-    candidate volume stays QUADRATIC — measured at sf1 it ran 672s
-    vs the exact kernel's ~170-205s, and re-sweeping it every round
-    cost 6.6s for a lesson already on file.  The production path is
-    ``peer_search_rank_window_topk`` (linear candidates; 22.7s at sf1
-    at recall 1.0000 — SCALE.md round-9 appendix).  Still
-    value-oracled end-to-end for manual replay via
-    ``registry.NEGATIVE_RESULTS`` (the SQL replicates splits,
-    bucketing, and scoring bit-for-bit, driver-green r10-r12);
-    ``peer_search_pruned_recall`` remains registered and quantifies
-    the prune's recall vs the exact kernel every sweep."""
-    return (
-        _pruned_spark(spark, sf_dir)
-        .select("tgt_custkey", "src_custkey", F.round("score", 4).alias("score"))
-        .orderBy("tgt_custkey", "src_custkey")
-    )
-
-
-_EXACT_PAIRS_CTE = f"""
-    exact_scored AS (
-        SELECT l.c_custkey AS tgt_custkey, r.c_custkey AS src_custkey,
-               CAST(0.6 AS DOUBLE) * (l.v0 * r.v0 + l.v1 * r.v1)
-               + CAST(0.399 AS DOUBLE) * ({_HOPS_SQL})
-               + CAST(0.001 AS DOUBLE) * ({_HAVS_SQL}) AS score
-        FROM normed l JOIN normed r
-          ON l.c_custkey % 10 = 0 AND r.c_custkey % 10 <> 0),
-    exact_ranked AS (
-        SELECT tgt_custkey, src_custkey,
-               row_number() OVER (PARTITION BY tgt_custkey
-                                  ORDER BY score DESC, src_custkey) AS rn
-        FROM exact_scored WHERE score >= 0.0),
-    exact_pairs AS (
-        SELECT tgt_custkey, src_custkey FROM exact_ranked WHERE rn <= 15)
-"""
-
-
-@register(
-    "peer_search_pruned_recall",
-    sql=f"""
-    WITH {_FIRMO_SQL},
-    {_pruned_cte()},
-    pruned_pairs AS (
-        SELECT tgt_custkey, src_custkey FROM pruned_ranked WHERE rn <= 15),
-    {_EXACT_PAIRS_CTE},
-    counts AS (
-        SELECT (SELECT count(*) FROM exact_pairs) AS n_exact,
-               (SELECT count(*) FROM pruned_pairs) AS n_pruned,
-               (SELECT count(*) FROM exact_pairs e JOIN pruned_pairs p
-                 ON e.tgt_custkey = p.tgt_custkey
-                AND e.src_custkey = p.src_custkey) AS n_common)
-    SELECT n_exact, n_pruned, n_common,
-           round(CAST(n_common AS DOUBLE) / n_exact, 4) AS recall,
-           CAST(n_common AS DOUBLE) / n_exact >= 0.8 AS recall_ok
-    FROM counts
-    """,
-)
-def peer_search_pruned_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pruned-vs-exact evidence row (VERDICT r2 #1 'Done' criterion):
-    runs BOTH the exact blocked kernel and the candidate-pruned path,
-    and emits one row of set statistics — |exact top-15|, |pruned
-    top-15|, their intersection, recall, and a recall ≥ 0.8 contract
-    boolean.  Value-oracled on all five columns: DuckDB recomputes the
-    exact and pruned pair sets independently, so a hash match proves
-    both Spark paths AND the measured recall."""
-    firmo = _firmographics(spark, sf_dir)
-    prospects = firmo.filter(F.col("c_custkey") % 10 == 0).select(
-        F.col("c_custkey").alias("tgt_custkey"), "vec", "naics", "lat", "lon"
-    )
-    clients = firmo.filter(F.col("c_custkey") % 10 != 0).select(
-        F.col("c_custkey").alias("src_custkey"), "vec", "naics", "lat", "lon"
-    )
-    exact = hybrid_topk(
-        prospects, clients, "tgt_custkey", "src_custkey",
-        vec_col="vec", naics_col="naics", lat_col="lat", lon_col="lon",
-        k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS,
-    ).select("tgt_custkey", "src_custkey", F.lit(1).alias("__e"))
-    pruned = _pruned_spark(spark, sf_dir).select(
-        "tgt_custkey", "src_custkey", F.lit(1).alias("__p")
-    )
-    # one full outer join → one pass over each side, no recompute
-    joined = exact.join(pruned, ["tgt_custkey", "src_custkey"], "full")
-    n_common = F.count(F.when(F.col("__e").isNotNull() & F.col("__p").isNotNull(), 1))
-    n_exact = F.count("__e")
-    n_pruned = F.count("__p")
-    return joined.agg(
-        n_exact.alias("n_exact"),
-        n_pruned.alias("n_pruned"),
-        n_common.alias("n_common"),
-        F.round(
-            n_common.cast("double") / n_exact, 4
-        ).alias("recall"),
-        (n_common.cast("double") / n_exact >= 0.8).alias("recall_ok"),
-    )
-
-
 # Rank-window pruned peer search (round 9): the LINEAR-candidate
-# production path.  The block/bucket prune above is constant-factor —
-# its candidate set stays quadratic (measured sf1: 672s vs the exact
-# kernel's ~170-205s).  This variant decomposes by NAICS prefix LEVEL
+# production path.  The round-7 block/bucket prune it replaced was
+# constant-factor — its candidate set stayed quadratic (measured sf1:
+# 672s vs the exact kernel's ~170-205s).  This variant decomposes by NAICS prefix LEVEL
 # (hops is constant per level) and takes each prospect's sorted-
 # neighborhood by angle within each level block — candidates are
 # O(L · levels · window), independent of the client count.
@@ -1356,9 +1147,9 @@ def peer_search_rank_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     prospect takes the ±256 sorted-neighborhood by angle within its
     prefix block, exact-scores only those candidates, and keeps the
     top-15.  Candidate volume is O(prospects · levels · window) —
-    INDEPENDENT of client count, unlike the block/bucket prune
-    (`peer_search_hybrid_topk_pruned`), whose constant-factor arms
-    stay quadratic and measured SLOWER than the exact kernel at sf1
+    INDEPENDENT of client count, unlike the round-7 block/bucket
+    prune (deleted; SCALE.md round-9 appendix), whose constant-factor
+    arms stayed quadratic and measured SLOWER than the exact kernel at sf1
     (672s vs ~170-205s; this path: 22.7s — see SCALE.md round-9 row).
 
     Exactness: a true top-15 pair at prefix level p is beaten by <15
@@ -1603,7 +1394,7 @@ def rank_window_warm_nightly_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     drifted past prev) is pytest-pinned on the tie-heavy fixture
     (tests/test_projection_artifact.py warm-start cases)."""
     from prod_recommendation_pyspark_spark.operators.hybrid import (
-        _resolve_probe_window,
+        _resolve_artifact,
         rank_window_index,
         rank_window_probe,
     )
@@ -1614,7 +1405,7 @@ def rank_window_warm_nightly_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         calibration=prospects, calibration_id="tgt_custkey",
         k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS,
     ).localCheckpoint()
-    prev_w = _resolve_probe_window(night1, None)  # yesterday's __w
+    prev_w, _ = _resolve_artifact(night1, "rank_window_warm_nightly_e2e")
     night2 = rank_window_index(
         clients, "src_custkey", window=None,
         calibration=prospects, calibration_id="tgt_custkey",
@@ -3077,23 +2868,14 @@ def ivfpq_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # FULL-DIMENSION peer search (round 13, verdict #1): the reference's real
 # feature recipe (search_ranking_peers.py:442,450-455,608-611 — w_rev-weighted
-# log revenue + 3 numerics + OHE divisions = 9 dims) through a LINEAR/
-# sub-quadratic candidate generator (block-aware multi-probe IVF) and the
-# exact hybrid re-rank.  This retires the one scale constraint the 2-D
+# log revenue + 3 numerics + OHE divisions = 9 dims) through the
+# projection-keyed rank window (or the exact kernel, by the measured
+# dispatch rule) and the exact hybrid re-rank.  This retires the one scale constraint the 2-D
 # rank-window path carried (exact only for dim=2).
 # ---------------------------------------------------------------------------
 
 _FD_SEGS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
 _FD_DIM = 4 + len(_FD_SEGS)  # 9 — w_rev + 3 numerics + OHE(mktsegment)
-#: probes per (prospect, level) for the IVF arm.  Measured recall vs
-#: the exact kernel (SCALE.md round-13): n_probe 8 → 0.9387, 12 →
-#: 0.9991, 16 → 1.0000 at sf0.01; at sf0.1 the IVF arm PLATEAUS
-#: (16 → 0.9977, 32 → 0.9989, 16 w/ assign_probe=2 → 0.9977) — the
-#: concentrated all-positive geometry mis-buckets boundary clients —
-#: which is why the PRODUCTION full-dim query rides the projection
-#: window (recall 1.0000 at 13× prune); the IVF query ships as the
-#: approximate-serving variant, like the ANN ivf queries.
-_FD_NPROBE = 16
 _FD_W_REV = 0.80  # search_ranking_peers.py:608-611
 _FD_W_JPMC = 0.05
 _FD_W_NUM = (1.0 - _FD_W_REV - _FD_W_JPMC) / 3.0  # :442
@@ -3222,66 +3004,6 @@ def _fd_sumsq(a: str, pfx: str = "v") -> str:
     )
 
 
-def _fd_cand_cte() -> str:
-    """Candidate CTEs replaying ``hybrid.ivf_block_candidates`` +
-    ``ivf_auto_centroids`` on the full-dim sides: derived centroid
-    modulus, client argmax-cosine assignment, per-(prospect, level)
-    probing of the block-occupied lists, arm equi-join."""
-    cent_cols = ", ".join(f"v{i} AS c{i}" for i in range(1, _FD_DIM + 1))
-    ccsim = (
-        f"({_fd_vdot('x', 'ct', 'c')})"
-        f" / (sqrt({_fd_sumsq('x')}) * sqrt({_fd_sumsq('ct', 'c')}))"
-    )
-    return f"""
-    fpros AS (SELECT * FROM fnormed WHERE c_custkey % 10 = 0),
-    fclis AS (SELECT * FROM fnormed WHERE c_custkey % 10 <> 0),
-    fmod AS (SELECT greatest(1, count(*) // greatest(1,
-                 CAST(ceil(sqrt(count(*))) AS BIGINT))) AS m FROM fclis),
-    fcent AS (SELECT c_custkey AS list, {cent_cols} FROM fclis
-              WHERE c_custkey % (SELECT m FROM fmod) = 0),
-    fcassign AS (
-        SELECT cid, list FROM (
-            SELECT x.c_custkey AS cid, ct.list,
-                   row_number() OVER (
-                       PARTITION BY x.c_custkey
-                       ORDER BY {ccsim} DESC, ct.list) AS rn
-            FROM fclis x CROSS JOIN fcent ct)
-        WHERE rn <= 1),
-    flvls AS (SELECT unnest(range(0, 7)) AS lvl),
-    fcarm AS (
-        SELECT a.cid, l.lvl,
-               CASE WHEN l.lvl = 0 THEN ''
-                    ELSE substring(c.naics, 1, CAST(l.lvl AS INT)) END AS blk,
-               a.list
-        FROM fclis c JOIN fcassign a ON c.c_custkey = a.cid
-        CROSS JOIN flvls l),
-    fblists AS (SELECT DISTINCT lvl, blk, list FROM fcarm),
-    fqscore AS (
-        SELECT x.c_custkey AS pid, ct.list, {ccsim} AS csim
-        FROM fpros x CROSS JOIN fcent ct),
-    fparm AS (
-        SELECT p.c_custkey AS pid, l.lvl,
-               CASE WHEN l.lvl = 0 THEN ''
-                    ELSE substring(p.naics, 1, CAST(l.lvl AS INT)) END AS blk
-        FROM fpros p CROSS JOIN flvls l),
-    fprobed AS (
-        SELECT pid, lvl, blk, list FROM (
-            SELECT pa.pid, pa.lvl, pa.blk, bl.list, qs.csim,
-                   row_number() OVER (
-                       PARTITION BY pa.pid, pa.lvl
-                       ORDER BY qs.csim DESC, bl.list) AS rn
-            FROM fparm pa
-            JOIN fblists bl ON pa.lvl = bl.lvl AND pa.blk = bl.blk
-            JOIN fqscore qs ON qs.pid = pa.pid AND qs.list = bl.list)
-        WHERE rn <= {_FD_NPROBE}),
-    fcand AS (
-        SELECT DISTINCT pr.pid AS tgt, ca.cid AS src
-        FROM fprobed pr
-        JOIN fcarm ca ON pr.lvl = ca.lvl AND pr.blk = ca.blk
-                     AND pr.list = ca.list)
-"""
-
-
 def _fd_hybrid_score(l: str = "l", r: str = "r") -> str:
     return (
         f"CAST(0.6 AS DOUBLE) * ({_fd_vdot(l, r)})\n"
@@ -3296,8 +3018,7 @@ def _fd_sides(spark: SparkSession, sf_dir: str):
     stats + OHE + normalize feeds the candidate arms, both scoring
     sides, AND the window calibration; unmaterialized it re-executes
     per branch (measured cold-isolated at sf0.1: 32.2 → 28.1s for the
-    production query, 27.5 → 22.0s for the IVF arm, 20.1 → 18.2s for
-    the recall row).  Checkpoint blocks are reclaimed by the
+    production query, 20.1 → 18.2s for the recall row).  Checkpoint blocks are reclaimed by the
     ContextCleaner when the result frames are GC'd."""
     firmo = _firmographics_full(spark, sf_dir).localCheckpoint()
     prospects = firmo.filter(F.col("c_custkey") % 10 == 0).select(
@@ -3339,18 +3060,18 @@ def _fd_win_spark(
     :func:`_fd_prod_spark`, which dispatches between this arm and the
     exact kernel on the measured cost rule."""
     from prod_recommendation_pyspark_spark.operators.hybrid import (
-        hybrid_topk_pruned,
-        projection_window_candidates,
+        rank_window_candidates,
     )
 
     prospects, clients = _fd_sides(spark, sf_dir)
-    cand = projection_window_candidates(
+    cand = rank_window_candidates(
         prospects, clients, "tgt_custkey", "src_custkey",
-        _FD_DIRECTION, vec_col="vec", naics_col="naics",
+        vec_col="vec", naics_col="naics",
         window=window, min_window=_FD_WINDOW,
         k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS,
         window_cache=_DERIVED_WINDOW_CACHE,
         cache_key=("fulldim", sf_dir, _FD_WINDOW),
+        direction=_FD_DIRECTION,
     )
     return hybrid_topk_pruned(
         prospects, clients, "tgt_custkey", "src_custkey",
@@ -3368,7 +3089,7 @@ _FD_NCLIENTS_CACHE: dict[str, int] = {}
 
 def _fd_derived_window(prospects: DataFrame, clients: DataFrame, sf_dir: str) -> int:
     """Derive-then-floor-at-512 window for the full-dim recipe,
-    memoized under the SAME cache key ``projection_window_candidates``
+    memoized under the SAME cache key ``rank_window_candidates``
     uses in :func:`_fd_win_spark` — safe to share because the two
     derivations are value-identical: client positions and insertion
     counts count CLIENTS only, so ranking alongside all prospects vs
@@ -3377,13 +3098,13 @@ def _fd_derived_window(prospects: DataFrame, clients: DataFrame, sf_dir: str) ->
     key = ("fulldim", sf_dir, _FD_WINDOW)
     if key not in _DERIVED_WINDOW_CACHE:
         from prod_recommendation_pyspark_spark.operators.hybrid import (
-            derive_projection_window_stats,
+            derive_rank_window_stats,
         )
 
-        stats = derive_projection_window_stats(
-            prospects, clients, "tgt_custkey", "src_custkey", _FD_DIRECTION,
+        stats = derive_rank_window_stats(
+            prospects, clients, "tgt_custkey", "src_custkey",
             k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS,
-            min_window=_FD_WINDOW,
+            min_window=_FD_WINDOW, direction=_FD_DIRECTION,
         )
         _DERIVED_WINDOW_CACHE[key] = int(stats["window"])
     return _DERIVED_WINDOW_CACHE[key]
@@ -3415,8 +3136,7 @@ def _fd_prod_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     the PLAN, never the result — which is exactly what lets the SQL
     twin stay pinned to the window replay."""
     from prod_recommendation_pyspark_spark.operators.hybrid import (
-        hybrid_topk_pruned,
-        projection_window_candidates,
+        rank_window_candidates,
     )
 
     prospects, clients, w, n, kernel = _fd_route(spark, sf_dir)
@@ -3426,10 +3146,11 @@ def _fd_prod_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
             vec_col="vec", naics_col="naics", lat_col="lat", lon_col="lon",
             k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS,
         )
-    cand = projection_window_candidates(
+    cand = rank_window_candidates(
         prospects, clients, "tgt_custkey", "src_custkey",
-        _FD_DIRECTION, vec_col="vec", naics_col="naics", window=w,
+        vec_col="vec", naics_col="naics", window=w,
         k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS,
+        direction=_FD_DIRECTION,
     )
     return hybrid_topk_pruned(
         prospects, clients, "tgt_custkey", "src_custkey",
@@ -3448,7 +3169,7 @@ def _fd_proj_sql(alias: str) -> str:
 
 
 def _fd_win_cte(cli_filter: str = "", pro_filter: str = "") -> str:
-    """ANSI replay of ``projection_window_candidates``: per level,
+    """ANSI replay of ``rank_window_candidates(direction=...)``: per level,
     clients ranked by (projection, id); each prospect's insertion
     point is the count of clients strictly before it; candidates are
     the ±window sorted neighborhood — the ``_rank_cte`` pattern with
@@ -3499,92 +3220,6 @@ def _fd_win_cte(cli_filter: str = "", pro_filter: str = "") -> str:
 """
 
 
-def _fd_ivf_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from prod_recommendation_pyspark_spark.operators.hybrid import (
-        hybrid_topk_pruned,
-        ivf_block_candidates,
-    )
-    from prod_recommendation_pyspark_spark.operators.similarity import (
-        ivf_auto_centroids,
-    )
-
-    prospects, clients = _fd_sides(spark, sf_dir)
-    # the candidate pass touches the client frame three times
-    # (assignment, arms, centroid sample) and the re-rank once more —
-    # persist the slim feature frame instead of re-deriving the
-    # scaled/normalized plan per branch
-    clients = clients.persist()
-    centroids = ivf_auto_centroids(clients, "src_custkey", "vec")
-    cand = ivf_block_candidates(
-        prospects, clients, "tgt_custkey", "src_custkey",
-        centroids, vec_col="vec", naics_col="naics",
-        n_probe=_FD_NPROBE,
-    )
-    return hybrid_topk_pruned(
-        prospects, clients, "tgt_custkey", "src_custkey",
-        vec_col="vec", naics_col="naics", lat_col="lat", lon_col="lon",
-        k=TOPK_PEERS, threshold=THRESHOLD, w_hops=W_HOPS, w_havs=W_HAVS,
-        candidates=cand, dim=_FD_DIM,
-    )
-
-
-@register(
-    "peer_search_fulldim_ivf_topk",
-    sql=f"""
-    WITH {_fd_firmo_sql()},
-    {_fd_cand_cte()},
-    fscored AS (
-        SELECT fcand.tgt AS tgt_custkey, fcand.src AS src_custkey,
-               {_fd_hybrid_score()} AS score
-        FROM fcand JOIN fnormed l ON fcand.tgt = l.c_custkey
-                   JOIN fnormed r ON fcand.src = r.c_custkey),
-    franked AS (
-        SELECT tgt_custkey, src_custkey, score,
-               row_number() OVER (PARTITION BY tgt_custkey
-                                  ORDER BY score DESC, src_custkey) AS rn
-        FROM fscored WHERE score >= 0.0)
-    SELECT tgt_custkey, src_custkey, round(score, 4) AS score
-    FROM franked WHERE rn <= 15
-    ORDER BY tgt_custkey, src_custkey
-    """,
-    negative_result=True,
-)
-def peer_search_fulldim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """General-dim peer search, IVF ARM — DEMOTED to
-    ``registry.NEGATIVE_RESULTS`` for the firmographics recipe in
-    round 14 (r13 verdict #3 option (b), same discipline as the r7
-    quadratic prune): still runnable and fully value-oracled for
-    replay (the DuckDB twin re-derives centroid modulus, argmax
-    assignment, per-(prospect, level) block probing, candidate set,
-    and the 9-term score bit for bit; driver-green r13 on file), but
-    no longer a production path or a sweep line for THIS geometry.
-
-    Why demoted, measured: on the all-positive, w_rev-dominated
-    recipe, recall vs the exact kernel plateaus at 0.9977 (sf0.1) /
-    0.7962 (sf1) — cosine concentrates and sampled-centroid cells
-    interleave along a ~1-D manifold, so the prospect's
-    centroid-cosine order is a weak proxy for where its neighbors
-    live.  Round 14 also tested the obvious better-signal candidate
-    (rank lists by |proj(centroid) − proj(prospect)| on the feature-
-    weight profile — the informative coordinate): candidate coverage
-    of the true top-15 pairs at sf1 measured **0.1605** vs
-    centroid-cosine's 0.7962 (scripts/measure_fulldim_r14.py, SCALE.md
-    round-14) — the centroid projections are so concentrated that
-    projection distance is noise at list granularity; the failed
-    experiment is recorded rather than iterated past its evidence.
-    The production path is ``peer_search_fulldim_topk`` (kernel-vs-
-    window dispatch); ``ivf_block_candidates`` itself stays first-
-    class for clustered/multi-modal geometries, where the ANN suite
-    measures IVF winning."""
-    return (
-        _fd_ivf_spark(spark, sf_dir)
-        .select(
-            "tgt_custkey", "src_custkey", F.round("score", 4).alias("score")
-        )
-        .orderBy("tgt_custkey", "src_custkey")
-    )
-
-
 @register(
     "peer_search_fulldim_topk",
     sql=f"""
@@ -3619,7 +3254,8 @@ def peer_search_fulldim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-uniform synthetic recipe, where window-need grows ~linearly
     with density (133 → 1305 per ×10 data; at sf1 the kernel measured
     51 s vs the window arm's 636 s on identical input) — and the
-    projection-window arm (``projection_window_candidates`` at the
+    projection-window arm (``rank_window_candidates`` keyed by the
+    weight-profile direction at the
     derived window + exact unrolled-codegen re-rank) on clustered
     corpora whose derived windows stay small.
 
@@ -3631,16 +3267,13 @@ def peer_search_fulldim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark side runs whichever plan is cheaper.  Dispatch inputs are
     themselves value-oracled (``peer_search_fulldim_dispatch``).  Why
     not IVF: on this all-positive, w_rev-dominated geometry cosine
-    concentrates and sampled-centroid cells interleave — the IVF arm
-    plateaus at 0.9977 (sf0.1) / 0.7962 (sf1), and the round-14
-    better-signal experiment (projection-distance list ranking) made
-    it WORSE (coverage 0.1605 at sf1), so
-    ``peer_search_fulldim_ivf_topk`` is demoted to
-    ``registry.NEGATIVE_RESULTS`` for this recipe (value-oracled for
-    replay; the operator stays first-class for clustered geometries).
+    concentrates and sampled-centroid cells interleave — a block-aware
+    IVF arm plateaued at 0.9977 (sf0.1) / 0.7962 (sf1) recall and was
+    deleted (SCALE.md round-13 and round-14 appendices).
 
     Serving lifecycle (round 14): the window arm's nightly artifact is
-    ``projection_window_index`` / ``probe`` (__w + __dir stamped;
+    ``rank_window_index`` / ``probe`` keyed by the same direction
+    (__w + __dir stamped;
     ``peer_search_fulldim_probe_parity`` pins the probed serving under
     this same oracle).  Reference anchor: the blocked-matmul batching
     intent at search_ranking_peers.py:489-494,240-243."""
@@ -3703,10 +3336,7 @@ def peer_search_fulldim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets itself, so a hash match proves the Spark kernel, the Spark
     candidate path, AND the measured recall).  Floor ≥ 0.95 as the
     contract boolean; measured 1.0000 at sf0.001/sf0.01/sf0.1 (floor
-    512) and sf1 (derived 4096) — SCALE.md round-13 row.  The IVF
-    arm's recall (0.9977 at sf0.1, 0.7962 at sf1) is recorded in
-    SCALE.md — it stays the fallback for geometries where a single
-    projection is uninformative."""
+    512) and sf1 (derived 4096) — SCALE.md round-13 row."""
     prospects, clients = _fd_sides(spark, sf_dir)
     prospects = prospects.persist()
     clients = clients.persist()
@@ -3899,14 +3529,14 @@ def peer_search_serve_batch_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     (kernel at sf0.01's 1.35k clients, probe at sf0.1's 13.5k), so a
     green row at both scales is evidence for both routes end to end."""
     from prod_recommendation_pyspark_spark.operators.hybrid import (
-        projection_window_index,
+        rank_window_index,
         serve_batch,
     )
 
     prospects, clients = _fd_sides(spark, sf_dir)
     batch = prospects.filter(F.col("tgt_custkey") % 30 == 0)
-    index = projection_window_index(
-        clients, "src_custkey", _FD_DIRECTION, window=_FD_WINDOW
+    index = rank_window_index(
+        clients, "src_custkey", window=_FD_WINDOW, direction=_FD_DIRECTION
     ).localCheckpoint()
     if sf_dir not in _FD_NCLIENTS_CACHE:
         _FD_NCLIENTS_CACHE[sf_dir] = clients.count()
@@ -3949,12 +3579,12 @@ def peer_search_fulldim_probe_parity(
 ) -> DataFrame:
     """SERVING-PATH twin of the full-dim window arm (round-13 verdict
     #2's 'Done' query): build the general-dim nightly artifact ONCE
-    (operators/hybrid.py::projection_window_index — client corpus
-    ranked per arm by the reference-weight-profile projection, __w and
-    __dir stamped as metadata), answer the prospect set in TWO
+    (operators/hybrid.py::rank_window_index with direction= — client
+    corpus ranked per arm by the reference-weight-profile projection,
+    __w and __dir stamped as metadata), answer the prospect set in TWO
     independent probe batches
-    (operators/hybrid.py::projection_window_probe — window AND
-    direction read off the artifact; mismatches raise), score and
+    (operators/hybrid.py::rank_window_probe — window AND direction
+    read off the artifact; mismatches raise), score and
     top-15 exactly like the batch path.  The FULL VALUE ORACLE is the
     same window-512 CTE as ``peer_search_fulldim_topk``'s: a
     hash-green row proves the index's dense per-arm positions under
@@ -3964,26 +3594,26 @@ def peer_search_fulldim_probe_parity(
     production recipe now has the same nightly-build /
     intraday-probe economics as the 2-D path (the distributed rank
     runs at BUILD time; probes touch ≤4 window blocks per (prospect,
-    arm) — see the ``serving:projection_window_probe`` bench row).
+    arm) — see the ``serving:projection_rank_window_probe`` bench
+    row).
     CRUD rides the shared metadata-dispatched cells
     (rank_window_compact / rank_window_insert — pytest-pinned
     rebuild equivalences on __dir artifacts)."""
     from prod_recommendation_pyspark_spark.operators.hybrid import (
-        hybrid_topk_pruned,
-        projection_window_index,
-        projection_window_probe,
+        rank_window_index,
+        rank_window_probe,
     )
 
     prospects, clients = _fd_sides(spark, sf_dir)
-    index = projection_window_index(
-        clients, "src_custkey", _FD_DIRECTION, window=_FD_WINDOW
+    index = rank_window_index(
+        clients, "src_custkey", window=_FD_WINDOW, direction=_FD_DIRECTION
     ).localCheckpoint()
     batches = [
         prospects.filter(F.col("tgt_custkey") % 20 == 0),
         prospects.filter(F.col("tgt_custkey") % 20 != 0),
     ]
     probed = [
-        projection_window_probe(b, index, "tgt_custkey", "src_custkey")
+        rank_window_probe(b, index, "tgt_custkey", "src_custkey")
         for b in batches
     ]
     cand = probed[0].unionByName(probed[1])
@@ -4037,21 +3667,20 @@ def projection_window_delete_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     tombstone-probe semantics are pytest-pinned separately
     (tests/test_projection_artifact.py)."""
     from prod_recommendation_pyspark_spark.operators.hybrid import (
-        hybrid_topk_pruned,
-        projection_window_index,
-        projection_window_probe,
         rank_window_compact,
+        rank_window_index,
+        rank_window_probe,
     )
 
     prospects, clients = _fd_sides(spark, sf_dir)
-    index = projection_window_index(
-        clients, "src_custkey", _FD_DIRECTION, window=_FD_WINDOW
+    index = rank_window_index(
+        clients, "src_custkey", window=_FD_WINDOW, direction=_FD_DIRECTION
     )
     tombs = clients.filter(F.col("src_custkey") % 9 == 4).select(
         "src_custkey"
     )
     compacted = rank_window_compact(index, tombs).localCheckpoint()
-    cand = projection_window_probe(
+    cand = rank_window_probe(
         prospects, compacted, "tgt_custkey", "src_custkey"
     )
     kept = clients.join(F.broadcast(tombs), "src_custkey", "left_anti")
@@ -4103,22 +3732,21 @@ def projection_window_insert_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     so a hash-green row proves insert ≡ rebuild-over-the-grown-corpus
     for the projection family end to end."""
     from prod_recommendation_pyspark_spark.operators.hybrid import (
-        hybrid_topk_pruned,
-        projection_window_index,
-        projection_window_probe,
+        rank_window_index,
         rank_window_insert,
+        rank_window_probe,
     )
 
     prospects, clients = _fd_sides(spark, sf_dir)
     old = clients.filter(F.col("src_custkey") % 6 != 5)
     arrivals = clients.filter(F.col("src_custkey") % 6 == 5)
-    index = projection_window_index(
-        old, "src_custkey", _FD_DIRECTION, window=_FD_WINDOW
+    index = rank_window_index(
+        old, "src_custkey", window=_FD_WINDOW, direction=_FD_DIRECTION
     )
     grown = rank_window_insert(
         index, arrivals, "src_custkey"
     ).localCheckpoint()
-    cand = projection_window_probe(
+    cand = rank_window_probe(
         prospects, grown, "tgt_custkey", "src_custkey"
     )
     return (
@@ -4164,8 +3792,8 @@ def streaming_projection_serving_replay(
     streaming loops are artifact-FAMILY-driven: the same
     ``streaming/joins.py::streaming_peer_serving`` is handed a
     ``__dir`` artifact, detects the family from the metadata ONCE at
-    start (``_resolve_serving_probe`` — window + direction validated,
-    then stripped so no per-batch metadata jobs run), probes each of
+    start (``_resolve_artifact`` — window + direction validated once,
+    so no per-batch metadata jobs run), probes each of
     three real micro-batches with the projection key, and exact-scores
     at the direction's dim.  Prospects land in exactly one micro-batch
     and the probe is per-row independent, so the unioned per-batch
@@ -4177,15 +3805,15 @@ def streaming_projection_serving_replay(
     import tempfile
 
     from prod_recommendation_pyspark_spark.operators.hybrid import (
-        projection_window_index,
+        rank_window_index,
     )
     from prod_recommendation_pyspark_spark.streaming.joins import (
         streaming_peer_serving,
     )
 
     prospects, clients = _fd_sides(spark, sf_dir)
-    index = projection_window_index(
-        clients, "src_custkey", _FD_DIRECTION, window=_FD_WINDOW
+    index = rank_window_index(
+        clients, "src_custkey", window=_FD_WINDOW, direction=_FD_DIRECTION
     ).localCheckpoint()
     base = tempfile.mkdtemp(prefix="projection_serving_replay_")
     atexit.register(shutil.rmtree, base, ignore_errors=True)

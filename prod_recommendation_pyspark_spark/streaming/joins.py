@@ -322,31 +322,35 @@ def streaming_peer_serving(
     without restarting the loop (streamed ≡ batch-with-tombstones,
     pytest-pinned)."""
     from prod_recommendation_pyspark_spark.operators.hybrid import (
+        _key_dim,
+        _probe_resolved,
+        _resolve_artifact,
         hybrid_topk_pruned,
     )
 
-    # family + window + direction resolved and validated ONCE; per
-    # batch, probe a metadata-stripped view with the explicit values
-    # so the metadata agg jobs do not re-run every micro-batch (the
-    # index is static — its build params cannot change under a
-    # running query).  ROUND 14: the loop is artifact-family-driven —
-    # a __dir (projection) artifact serves the general-dim recipe
-    # through the same plumbing, scoring at the direction's dim.
-    probe, dim, probe_index = _resolve_serving_probe(index, window)
+    # window + key direction resolved and validated ONCE; per batch,
+    # the probe body runs with the resolved values, so the metadata
+    # agg job does not re-run every micro-batch (the index is static —
+    # its build params cannot change under a running query).  A __dir
+    # (projection) artifact serves the general-dim recipe through the
+    # same loop, scored at the direction's dim.
+    w, direction = _resolve_artifact(
+        index, "streaming_peer_serving", window=window
+    )
 
     def _serve(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        cand = probe(
-            batch_df, probe_index, left_id, right_id,
-            vec_col, naics_col, tombstones,
+        cand = _probe_resolved(
+            batch_df, index, left_id, right_id, w, direction,
+            vec_col=vec_col, naics_col=naics_col, tombstones=tombstones,
         )
         topk = hybrid_topk_pruned(
             batch_df, clients, left_id, right_id,
             vec_col=vec_col, naics_col=naics_col,
             lat_col=lat_col, lon_col=lon_col,
             k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
-            candidates=cand, dim=dim, broadcast_sides=True,
+            candidates=cand, dim=_key_dim(direction), broadcast_sides=True,
         )
         emit(topk, batch_id)
 
@@ -356,47 +360,6 @@ def streaming_peer_serving(
     if checkpoint_dir is not None:
         writer = writer.option("checkpointLocation", checkpoint_dir)
     return writer.start()
-
-
-def _resolve_serving_probe(index: DataFrame, window: int | None):
-    """Resolve a serving artifact's FAMILY + build metadata once, for
-    the streaming loops: returns ``(probe_fn, score_dim,
-    metadata-stripped index)`` where ``probe_fn(batch, idx, lid, rid,
-    vec_col, naics_col, tombstones)`` runs the family's probe with the
-    pre-validated window/direction (no per-batch metadata agg jobs).
-    2-D rank-window artifacts score at dim=2; ``__dir`` (projection)
-    artifacts score at ``len(direction)``."""
-    from prod_recommendation_pyspark_spark.operators.hybrid import (
-        _projection_probe_resolved,
-        _resolve_probe_direction,
-        _resolve_probe_window,
-        rank_window_probe,
-    )
-
-    if "__dir" in index.columns:
-        direction = _resolve_probe_direction(index, None)
-        w = _resolve_probe_window(index.drop("__dir"), window)
-        stripped = index.drop("__w", "__dir")
-
-        def probe(batch, idx, lid, rid, vec_col, naics_col, tombstones):
-            return _projection_probe_resolved(
-                batch, idx, lid, rid, direction, w,
-                vec_col=vec_col, naics_col=naics_col, tombstones=tombstones,
-            )
-
-        return probe, len(direction), stripped
-
-    w = _resolve_probe_window(index, window)
-    stripped = index.drop("__w")
-
-    def probe(batch, idx, lid, rid, vec_col, naics_col, tombstones):
-        return rank_window_probe(
-            batch, idx, lid, rid,
-            vec_col=vec_col, naics_col=naics_col, window=w,
-            tombstones=tombstones,
-        )
-
-    return probe, 2, stripped
 
 
 def streaming_peer_serving_published(
@@ -458,6 +421,9 @@ def streaming_peer_serving_published(
     in-flight batch may still be reading version N's files after N+1
     commits (see the prune docstring)."""
     from prod_recommendation_pyspark_spark.operators.hybrid import (
+        _key_dim,
+        _probe_resolved,
+        _resolve_artifact,
         hybrid_topk_pruned,
     )
     from prod_recommendation_pyspark_spark.sources.readers import (
@@ -465,7 +431,9 @@ def streaming_peer_serving_published(
         read_published,
     )
 
-    state: dict = {"version": None, "index": None, "probe": None, "dim": 2}
+    state: dict = {
+        "version": None, "index": None, "window": None, "direction": None,
+    }
 
     def _serve(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -512,23 +480,25 @@ def streaming_peer_serving_published(
             return
         if v != state["version"]:
             idx = read_published(spark, base, version=v)
-            # family + metadata validated once per resolved version
-            # (round 14: __dir projection artifacts hot-swap through
-            # the same loop, scored at the direction's dim)
-            state["probe"], state["dim"], state["index"] = (
-                _resolve_serving_probe(idx, None)
+            # window + key direction validated once per resolved
+            # version (__dir projection artifacts hot-swap through the
+            # same loop, scored at the direction's dim)
+            state["window"], state["direction"] = _resolve_artifact(
+                idx, "streaming_peer_serving_published"
             )
-            state["version"] = v
-        cand = state["probe"](
-            batch_df, state["index"], left_id, right_id,
-            vec_col, naics_col, tombstones,
+            state["index"], state["version"] = idx, v
+        direction = state["direction"]
+        cand = _probe_resolved(
+            batch_df, state["index"], left_id, right_id, state["window"],
+            direction, vec_col=vec_col, naics_col=naics_col,
+            tombstones=tombstones,
         )
         topk = hybrid_topk_pruned(
             batch_df, clients, left_id, right_id,
             vec_col=vec_col, naics_col=naics_col,
             lat_col=lat_col, lon_col=lon_col,
             k=k, threshold=threshold, w_hops=w_hops, w_havs=w_havs,
-            candidates=cand, dim=state["dim"], broadcast_sides=True,
+            candidates=cand, dim=_key_dim(direction), broadcast_sides=True,
         )
         emit(topk, batch_id)
 

@@ -3,7 +3,7 @@ serving artifact — the general-dim twin of the round-12 sf10
 nightly-artifact measurement (scripts/measure_nightly_sf10.py).
 
 At sf1 (/tmp/sf1: 150k customers -> 15k prospects / 135k clients via
-the production %10 split), build ``projection_window_index`` at the
+the production %10 split), build ``rank_window_index(direction=...)`` at the
 sf1-DERIVED window 4096 (SCALE.md round-13/14: measured max-need 1305
 -> x2 pad -> ladder 4096; re-deriving here would re-pay the
 calibration the round-14 appendix already records), WRITE it
@@ -48,10 +48,10 @@ from pyspark.sql import functions as F
 from prod_recommendation_pyspark_spark.operators.hybrid import (
     hybrid_topk,
     hybrid_topk_pruned,
-    projection_window_index,
-    projection_window_probe,
     rank_window_compact,
+    rank_window_index,
     rank_window_insert,
+    rank_window_probe,
 )
 from prod_recommendation_pyspark_spark.queries.similarity import (
     _FD_DIM,
@@ -79,8 +79,8 @@ def run(spark, sf_dir: str, out_dir: str, window: int) -> dict:
 
     # 1. nightly BUILD at the (already-derived) window, written out
     t0 = time.time()
-    projection_window_index(
-        clis, "src_custkey", _FD_DIRECTION, window=window
+    rank_window_index(
+        clis, "src_custkey", window=window, direction=_FD_DIRECTION
     ).write.mode("overwrite").partitionBy("__lvl").parquet(out_dir)
     out["build_write_wall_s"] = round(time.time() - t0, 1)
     artifact = spark.read.parquet(out_dir)
@@ -94,7 +94,7 @@ def run(spark, sf_dir: str, out_dir: str, window: int) -> dict:
     out["probe_batch_rows"] = batch.count()
 
     def serve(idx, clients):
-        cand = projection_window_probe(
+        cand = rank_window_probe(
             batch, idx, "tgt_custkey", "src_custkey"
         )
         served = hybrid_topk_pruned(
@@ -165,8 +165,8 @@ def run(spark, sf_dir: str, out_dir: str, window: int) -> dict:
         "left_anti",
     )
     out["arrival_rows"] = arrivals.count()
-    holdout_idx = projection_window_index(
-        held, "src_custkey", _FD_DIRECTION, window=window
+    holdout_idx = rank_window_index(
+        held, "src_custkey", window=window, direction=_FD_DIRECTION
     ).localCheckpoint()
     t0 = time.time()
     grown = rank_window_insert(

@@ -32,7 +32,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from prod_recommendation_pyspark_spark.operators.hybrid import (
-    derive_projection_window_stats,
     derive_rank_window_stats,
 )
 from prod_recommendation_pyspark_spark.queries.similarity import (
@@ -53,15 +52,12 @@ def run(spark, sf_dir: str, family: str) -> dict:
     )
     if family == "rank":
         pros, clis = _rank_sides(spark, sf_dir)
-        derive = lambda **extra: derive_rank_window_stats(  # noqa: E731
-            pros, clis, "tgt_custkey", "src_custkey", **kw, **extra
-        )
     else:
         pros, clis = _fd_sides(spark, sf_dir)
-        derive = lambda **extra: derive_projection_window_stats(  # noqa: E731
-            pros, clis, "tgt_custkey", "src_custkey", _FD_DIRECTION,
-            **kw, **extra,
-        )
+        kw["direction"] = _FD_DIRECTION
+    derive = lambda **extra: derive_rank_window_stats(  # noqa: E731
+        pros, clis, "tgt_custkey", "src_custkey", **kw, **extra
+    )
     out: dict = {
         "sf_dir": sf_dir,
         "family": family,

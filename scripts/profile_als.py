@@ -42,9 +42,8 @@ from prod_recommendation_pyspark_spark.recommender.ratings import (
 from prod_recommendation_pyspark_spark.session import get_spark
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-# warmup fixture: third argument, defaulting to the sf0.001 sibling of SF
-WARMUP = (sys.argv[2] if len(sys.argv) > 2
-          else os.path.join(os.path.dirname(SF.rstrip("/")), "sf0.001"))
+# warmup fixture: the sf0.001 sibling of SF
+WARMUP = os.path.join(os.path.dirname(SF.rstrip("/")), "sf0.001")
 MODE = sys.argv[2] if len(sys.argv) > 2 else "breakdown"
 
 

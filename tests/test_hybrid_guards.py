@@ -1,8 +1,7 @@
-"""Guard-rail tests for the pruned hybrid peer search and the LSH dim
+"""Guard-rail tests for the candidate-pruned hybrid peer search (the
+rank-window family, 2-D angle and projection keys) and the LSH dim
 probe (round-4 verdict items 5-7): a null leading vector must not
-poison LSH sizing, the default candidate generator must keep the
-cosine arm (cross-industry peers reachable), and the NAICS skew guard
-must change task layout only — never the candidate set."""
+poison LSH sizing."""
 
 from __future__ import annotations
 
@@ -10,17 +9,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from prod_recommendation_pyspark_spark.operators.hybrid import (
-    hybrid_candidates,
     hybrid_topk_pruned,
 )
 from prod_recommendation_pyspark_spark.operators.similarity import probe_dim
 
 
-def _firmo(spark, n=60, naics_of=None, vec_of=None):
-    naics_of = naics_of or (lambda i: f"52{i % 3}100")
-    vec_of = vec_of or (lambda i: [1.0, float(i % 7), 2.0])
+def _firmo(spark, n):
+    """``n`` firms with 3-dim vectors."""
     rows = [
-        (i, naics_of(i), vec_of(i), float(i % 50), float(i % 80))
+        (i, f"52{i % 3}100", [1.0, float(i % 7), 2.0], float(i % 50), float(i % 80))
         for i in range(n)
     ]
     return spark.createDataFrame(
@@ -57,13 +54,6 @@ def test_empty_inputs_yield_empty_results(spark):
 
     empty = spark.createDataFrame([], "id long, vec array<double>")
     assert embedding_near_dup_pairs(empty, "id", "vec").count() == 0
-    left = spark.createDataFrame(
-        [], "lid long, naics string, vec array<double>"
-    )
-    right = spark.createDataFrame(
-        [], "rid long, naics string, vec array<double>"
-    )
-    assert hybrid_candidates(left, right, "lid", "rid", vec_col="vec").count() == 0
 
 
 def test_embedding_near_dup_survives_null_first_vector(spark):
@@ -82,111 +72,6 @@ def test_embedding_near_dup_survives_null_first_vector(spark):
         for r in embedding_near_dup_pairs(df, "id", "vec", threshold=0.999).collect()
     }
     assert (99, 100) in got
-
-
-def test_pruned_default_keeps_cross_industry_cosine_arm(spark):
-    """tables=None must derive seeded LSH tables, so a high-cosine pair
-    in a DIFFERENT industry survives pruning (the round-4 default
-    silently degraded to NAICS-only blocking and lost such pairs)."""
-    # ids 0..9 industry A, 10..19 industry B; identical vectors across
-    # industries → every cross-industry pair has cosine 1
-    df = _firmo(
-        spark,
-        n=20,
-        naics_of=lambda i: "521000" if i < 10 else "639900",
-        vec_of=lambda i: [1.0, 2.0, 3.0],
-    )
-    left = df.select(F.col("id").alias("lid"), "naics", "vec", "lat", "lon")
-    right = df.select(F.col("id").alias("rid"), "naics", "vec", "lat", "lon")
-    out = hybrid_topk_pruned(
-        left, right, "lid", "rid", vec_col="vec", k=15, threshold=0.0
-    )
-    cross = [
-        r for r in out.collect() if (r.lid < 10) != (r.rid < 10)
-    ]
-    assert cross, "no cross-industry pair survived pruning with default tables"
-
-
-def test_skew_guard_preserves_candidate_set(spark):
-    """A dominant NAICS prefix split across sub-blocks must yield
-    EXACTLY the same candidate pairs as the unsplit join — the guard
-    changes task layout, not semantics."""
-    # 50 of 60 rows share one 4-digit prefix (dominant block)
-    df = _firmo(
-        spark, n=60, naics_of=lambda i: "521100" if i < 50 else f"60{i % 5}000"
-    )
-    left = df.select(F.col("id").alias("lid"), "naics", "vec")
-    right = df.select(F.col("id").alias("rid"), "naics", "vec")
-
-    def cand(cap):
-        return {
-            (r.lid, r.rid)
-            for r in hybrid_candidates(
-                left, right, "lid", "rid", vec_col="vec",
-                tables=[], max_block_rows=cap,
-            ).collect()
-        }
-
-    salted = cand(7)  # dominant block → ceil(50/7) = 8 sub-blocks
-    unsplit = cand(10**6)
-    assert salted == unsplit and len(unsplit) == 50 * 50 + 10 * 2
-
-
-def test_quantile_arm_covers_cross_industry_cosine(spark):
-    """The equi-depth quantile arm (round-7 replacement for sign-LSH
-    on low-dim vectors) must surface a high-cosine pair in a DIFFERENT
-    industry — same contract the LSH arm was added for."""
-    df = _firmo(
-        spark,
-        n=40,
-        naics_of=lambda i: "521000" if i < 20 else "639900",
-        # a spread of angles; ids i and i+20 share the identical vector
-        vec_of=lambda i: [1.0 + (i % 20) * 0.3, 2.0],
-    )
-    left = df.select(F.col("id").alias("lid"), "naics", "vec", "lat", "lon")
-    right = df.select(F.col("id").alias("rid"), "naics", "vec", "lat", "lon")
-    got = {
-        (r.lid, r.rid)
-        for r in hybrid_candidates(
-            left, right, "lid", "rid", vec_col="vec",
-            tables=[], quantile_buckets=8,
-        ).collect()
-    }
-    # every identical-vector cross-industry pair must be a candidate:
-    # identical vectors share a bucket, and ±1 probing cannot miss it
-    for i in range(20):
-        assert (i, i + 20) in got, f"cross-industry twin {i} lost"
-
-
-def test_quantile_arm_actually_prunes(spark):
-    """On angularly spread vectors the quantile arm must NOT return
-    the all-pairs product (the sign-LSH failure mode this replaces):
-    with B buckets and ±1 probing, a left row pairs with ~3/B of the
-    right side, not all of it."""
-    import math
-
-    n = 200
-    df = _firmo(
-        spark,
-        n=n,
-        # unique PREFIX-4 per row → the NAICS arm contributes only the
-        # 200 self-pairs, isolating the quantile arm's volume
-        naics_of=lambda i: f"{1000 + i}00",
-        # all angles inside the first quadrant: v0 > 0, so v1 = sin θ
-        # is the monotone proxy the arm's contract requires
-        vec_of=lambda i: [
-            math.cos(0.1 + 1.3 * i / n),
-            math.sin(0.1 + 1.3 * i / n),
-        ],
-    )
-    left = df.select(F.col("id").alias("lid"), "naics", "vec")
-    right = df.select(F.col("id").alias("rid"), "naics", "vec")
-    n_cand = hybrid_candidates(
-        left, right, "lid", "rid", vec_col="vec",
-        tables=[], quantile_buckets=20,
-    ).count()
-    # ~3/20 of all pairs (+ bucket-boundary slack); all-pairs = 40000
-    assert n_cand < 0.3 * n * n, f"quantile arm did not prune: {n_cand}"
 
 
 def _sf_sides(spark, sf_dir):
@@ -793,72 +678,16 @@ def test_rank_window_cache_hit_and_miss(spark, sf_dir):
     assert seeded == {"snapB": 16}  # hit neither re-derives nor mutates
 
 
-def test_ivf_block_candidates_generous_probe_equals_exact(spark):
-    """Round-13 general-dim candidate generator: with probing wide
-    enough to cover every list, the candidate set contains every
-    pair (the level-0 arm degenerates to the full product), so the
-    exact re-rank over candidates must equal the exact BLAS kernel
-    pair-for-pair on the FULL 9-dim reference feature vector; a
-    narrow probe must stay a strict subset of the pair universe
-    (it actually prunes) while remaining top-k-complete at the
-    measured n_probe."""
-    from prod_recommendation_pyspark_spark.operators.hybrid import (
-        hybrid_topk,
-        hybrid_topk_pruned,
-        ivf_block_candidates,
-    )
-    from prod_recommendation_pyspark_spark.operators.similarity import (
-        ivf_auto_centroids,
-    )
-    from prod_recommendation_pyspark_spark.queries.similarity import (
-        _FD_DIM,
-        _fd_sides,
-    )
-
-    pros, clis = _fd_sides(spark, "/root/testdata/sf0.001")
-    pros, clis = pros.persist(), clis.persist()
-    cents = ivf_auto_centroids(clis, "src_custkey", "vec")
-    n_lists = cents.count()
-    wide = ivf_block_candidates(
-        pros, clis, "tgt_custkey", "src_custkey", cents,
-        n_probe=n_lists,
-    )
-    assert wide.count() == pros.count() * clis.count()
-    pairs = lambda df: {  # noqa: E731
-        (r["tgt_custkey"], r["src_custkey"]) for r in df.collect()
-    }
-    via_cand = hybrid_topk_pruned(
-        pros, clis, "tgt_custkey", "src_custkey",
-        candidates=wide, dim=_FD_DIM, k=15,
-    )
-    exact = hybrid_topk(
-        pros, clis, "tgt_custkey", "src_custkey", k=15
-    )
-    assert pairs(via_cand) == pairs(exact) and len(pairs(exact)) > 0
-
-    # a genuinely narrow probe (2 of the ~12 lists at this sf) must
-    # actually PRUNE — strict subset of the pair universe — while
-    # still containing every same-full-naics pair its deep arms probe
-    # nearly fully; top-k completeness at the REGISTERED pin is
-    # carried by peer_search_fulldim_recall (measured 1.0), not here
-    narrow = ivf_block_candidates(
-        pros, clis, "tgt_custkey", "src_custkey", cents, n_probe=2,
-    )
-    n_narrow = narrow.count()
-    assert 0 < n_narrow < pros.count() * clis.count()
-    assert pairs(narrow) < pairs(wide)
-
-
 def test_projection_window_derivation_and_memo(spark):
-    """9-D projection window (round 13): (a) a window covering the
-    whole corpus makes the candidate-pruned result equal the exact
-    kernel pair-for-pair; (b) ``window=None`` derives a ladder window
-    ≥ the floor and memoizes it per cache key; (c) a seeded cache hit
-    is used verbatim (no re-derivation)."""
+    """The rank window at the 9-D projection key (round 13): (a) a
+    window covering the whole corpus makes the candidate-pruned result
+    equal the exact kernel pair-for-pair; (b) ``window=None`` derives
+    a ladder window ≥ the floor and memoizes it per cache key; (c) a
+    seeded cache hit is used verbatim (no re-derivation)."""
     from prod_recommendation_pyspark_spark.operators.hybrid import (
         hybrid_topk,
         hybrid_topk_pruned,
-        projection_window_candidates,
+        rank_window_candidates,
     )
     from prod_recommendation_pyspark_spark.queries.similarity import (
         _FD_DIM,
@@ -872,9 +701,9 @@ def test_projection_window_derivation_and_memo(spark):
     pairs = lambda df: {  # noqa: E731
         (r["tgt_custkey"], r["src_custkey"]) for r in df.collect()
     }
-    wide = projection_window_candidates(
-        pros, clis, "tgt_custkey", "src_custkey", _FD_DIRECTION,
-        window=n_clis,
+    wide = rank_window_candidates(
+        pros, clis, "tgt_custkey", "src_custkey",
+        window=n_clis, direction=_FD_DIRECTION,
     )
     via_wide = hybrid_topk_pruned(
         pros, clis, "tgt_custkey", "src_custkey",
@@ -884,82 +713,35 @@ def test_projection_window_derivation_and_memo(spark):
     assert pairs(via_wide) == pairs(exact) and len(pairs(exact)) > 0
 
     cache = {}
-    derived = projection_window_candidates(
-        pros, clis, "tgt_custkey", "src_custkey", _FD_DIRECTION,
+    derived = rank_window_candidates(
+        pros, clis, "tgt_custkey", "src_custkey",
         window=None, min_window=128, window_cache=cache, cache_key="s1",
+        direction=_FD_DIRECTION,
     )
     assert derived.count() > 0
     assert isinstance(cache.get("s1"), int) and cache["s1"] >= 128
 
     seeded = {"s2": 32}  # deliberately NOT the derived value
-    hit = projection_window_candidates(
-        pros, clis, "tgt_custkey", "src_custkey", _FD_DIRECTION,
+    hit = rank_window_candidates(
+        pros, clis, "tgt_custkey", "src_custkey",
         window=None, window_cache=seeded, cache_key="s2",
+        direction=_FD_DIRECTION,
     )
-    explicit = projection_window_candidates(
-        pros, clis, "tgt_custkey", "src_custkey", _FD_DIRECTION,
-        window=32,
+    explicit = rank_window_candidates(
+        pros, clis, "tgt_custkey", "src_custkey",
+        window=32, direction=_FD_DIRECTION,
     )
     assert pairs(hit) == pairs(explicit)
     assert seeded == {"s2": 32}
 
 
-def test_ivf_block_candidates_multi_assign_contract(spark):
-    """Client multi-assignment's REAL contract (discovered by this
-    test's first draft, now pinned): at fixed small n_probe it is NOT
-    monotone — extra client copies enrich each block's occupied-list
-    pool, and a newly-occupied list can displace a previously-probed
-    one from the prospect's top-n_probe — but once n_probe covers the
-    occupied pool, assign_probe=2 is a strict superset (every client
-    is fetchable through BOTH of its lists)."""
-    from prod_recommendation_pyspark_spark.operators.hybrid import (
-        ivf_block_candidates,
-    )
-    from prod_recommendation_pyspark_spark.operators.similarity import (
-        ivf_auto_centroids,
-    )
-    from prod_recommendation_pyspark_spark.queries.similarity import (
-        _fd_sides,
-    )
-
-    pros, clis = _fd_sides(spark, "/root/testdata/sf0.001")
-    pros, clis = pros.persist(), clis.persist()
-    cents = ivf_auto_centroids(clis, "src_custkey", "vec")
-    n_lists = cents.count()
-    pairs = lambda df: {  # noqa: E731
-        (r["tgt_custkey"], r["src_custkey"]) for r in df.collect()
-    }
-    # generous probing: multi-assignment can only add pairs
-    one_full = pairs(ivf_block_candidates(
-        pros, clis, "tgt_custkey", "src_custkey", cents,
-        n_probe=n_lists, assign_probe=1,
-    ))
-    two_full = pairs(ivf_block_candidates(
-        pros, clis, "tgt_custkey", "src_custkey", cents,
-        n_probe=n_lists, assign_probe=2,
-    ))
-    assert one_full and one_full <= two_full
-    # narrow probing: displacement is REAL — the sets may differ in
-    # both directions, but volume stays bounded by ~assign_probe x
-    one = pairs(ivf_block_candidates(
-        pros, clis, "tgt_custkey", "src_custkey", cents,
-        n_probe=2, assign_probe=1,
-    ))
-    two = pairs(ivf_block_candidates(
-        pros, clis, "tgt_custkey", "src_custkey", cents,
-        n_probe=2, assign_probe=2,
-    ))
-    assert one and two
-    assert len(two) <= 2 * len(one)
-
-
 def test_fulldim_candidate_operators_handle_empty_sides(spark):
-    """Empty prospect/client relations must flow through both
-    general-dim candidate generators as empty outputs — no dim-probe
-    crashes, no degenerate windows (same contract the 2-D paths pin)."""
+    """Empty prospect/client relations must flow through the rank
+    window at a general-dim projection key as empty outputs — no
+    dim-probe crashes, no degenerate windows (same contract the 2-D
+    key pins)."""
     from prod_recommendation_pyspark_spark.operators.hybrid import (
-        ivf_block_candidates,
-        projection_window_candidates,
+        rank_window_candidates,
     )
 
     schema = (
@@ -975,31 +757,21 @@ def test_fulldim_candidate_operators_handle_empty_sides(spark):
           f"52{i:04d}", 1.0, 2.0) for i in range(1, 8)],
         schema.replace("tgt_custkey", "src_custkey"),
     )
-    cents = full_r.selectExpr("src_custkey AS centroid_id", "vec")
     direction = [0.8] + [0.05] * 8
-    assert projection_window_candidates(
-        empty_l, full_r, "tgt_custkey", "src_custkey", direction
+    assert rank_window_candidates(
+        empty_l, full_r, "tgt_custkey", "src_custkey", direction=direction
     ).count() == 0
-    assert projection_window_candidates(
-        empty_l, full_r, "tgt_custkey", "src_custkey", direction,
+    assert rank_window_candidates(
+        empty_l, full_r, "tgt_custkey", "src_custkey", direction=direction,
         window=None,  # empty-left derivation: floor window, no crash
-    ).count() == 0
-    assert ivf_block_candidates(
-        empty_l, full_r, "tgt_custkey", "src_custkey", cents
     ).count() == 0
     full_l = spark.createDataFrame(
         [(10, [0.7, 0.1, 0.1, 0.1, 0.05, 0.0, 0.0, 0.0, 0.0],
           "520001", 1.0, 2.0)],
         schema,
     )
-    assert projection_window_candidates(
-        full_l, empty_r, "tgt_custkey", "src_custkey", direction
-    ).count() == 0
-    empty_c = spark.createDataFrame(
-        [], "centroid_id long, vec array<double>"
-    )
-    assert ivf_block_candidates(
-        full_l, empty_r, "tgt_custkey", "src_custkey", empty_c
+    assert rank_window_candidates(
+        full_l, empty_r, "tgt_custkey", "src_custkey", direction=direction
     ).count() == 0
 
 
@@ -1084,26 +856,30 @@ def test_warm_start_derivation_keeps_and_escalates(spark):
 
 
 def test_warm_start_projection_index_threads_prev_window(spark):
-    """projection_window_index(prev_window=yesterday's __w) builds at
-    the kept window without re-paying the full calibration — the
+    """rank_window_index(prev_window=yesterday's __w) builds at the
+    kept window without re-paying the full calibration — the
     artifact's __w equals the cold-derived __w (nightly warm rebuild
-    == cold rebuild, pytest-pinned at fixture scale)."""
+    == cold rebuild, pytest-pinned at fixture scale), at the
+    projection key and at the 2-D angle key alike."""
     from pyspark.sql import functions as F
 
     from prod_recommendation_pyspark_spark.operators.hybrid import (
-        derive_projection_window_stats,
-        projection_window_index,
+        derive_rank_window_stats,
+        rank_window_index,
     )
 
     pros, clis = _tie_heavy_sides(spark)
-    direction = [0.6, 0.8]
-    cold = derive_projection_window_stats(
-        pros, clis, "tgt", "src", direction, k=5, threshold=-10.0
-    )
-    warm_index = projection_window_index(
-        clis, "src", direction, window=None,
-        calibration=pros, calibration_id="tgt",
-        k=5, threshold=-10.0, prev_window=cold["window"],
-    )
-    got_w = warm_index.select(F.max("__w")).first()[0]
-    assert got_w == cold["window"]
+    for direction in ([0.6, 0.8], None):
+        cold = derive_rank_window_stats(
+            pros, clis, "tgt", "src", k=5, threshold=-10.0,
+            direction=direction,
+        )
+        warm_index = rank_window_index(
+            clis, "src", window=None,
+            calibration=pros, calibration_id="tgt",
+            k=5, threshold=-10.0, prev_window=cold["window"],
+            direction=direction,
+        )
+        got_w = warm_index.select(F.max("__w")).first()[0]
+        assert got_w == cold["window"]
+        assert ("__dir" in warm_index.columns) == (direction is not None)

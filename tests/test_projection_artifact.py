@@ -1,10 +1,11 @@
-"""Projection-window SERVING artifact (round-13 verdict #2): the
+"""Projection-keyed SERVING artifact (round-13 verdict #2): the
 general-dim peer search gets the same nightly index / intraday probe /
-CRUD lifecycle the 2-D rank-window artifact has — same machinery
-(`_arm_clients(key_expr=...)`, `_distributed_rank`, `_probe_fetch`),
-with the projection DIRECTION stamped as ``__dir`` metadata next to the
-``__w`` window so a probe/insert/compact can never silently use a
-different key than the corpus was ranked by.
+CRUD lifecycle the 2-D rank-window artifact has — it IS that artifact,
+built with ``direction=``: the within-arm sort key becomes the
+projection onto the direction, stamped as ``__dir`` metadata next to
+the ``__w`` window so a probe/insert/compact can never silently use a
+different key than the corpus was ranked by.  Lifecycle tests run at
+both keys (``KEYS``).
 
 Also pins the kernel-vs-window DISPATCH rule (round-13 verdict #1):
 `projection_window_wins` routes the production full-dim query to the
@@ -14,28 +15,31 @@ at sf1 on uniform data — SCALE.md round-13)."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
 DIRECTION = [0.6, 0.2, 0.1, 0.07, 0.03]
+#: the rank-window family's two sort keys: the 2-D angle proxy (no
+#: direction) and the general-dim projection onto DIRECTION
+KEYS = (None, DIRECTION)
 
 
-def _pw_fixture(spark):
+def _pw_fixture(spark, direction=DIRECTION):
+    """120 firms at the key's dim: 5-dim vectors for DIRECTION, 2-D
+    first-quadrant unit vectors for the angle key."""
     def naics(i):
         if i % 11 == 0:
             return None  # malformed arm must survive the lifecycle too
         return f"52{i % 3}1{i % 4}0"
 
-    rows = [
-        (
-            i,
-            naics(i),
-            [float((i * 7 + d * 13) % 29) / 29.0 for d in range(5)],
-            float(i % 50),
-            float(i % 80),
-        )
-        for i in range(120)
-    ]
+    def vec(i):
+        if direction is None:
+            return [math.cos(0.1 + 1.3 * i / 120), math.sin(0.1 + 1.3 * i / 120)]
+        return [float((i * 7 + d * 13) % 29) / 29.0 for d in range(len(direction))]
+
+    rows = [(i, naics(i), vec(i), float(i % 50), float(i % 80)) for i in range(120)]
     df = spark.createDataFrame(
         rows, "id long, naics string, vec array<double>, lat double, lon double"
     )
@@ -49,152 +53,177 @@ def _pairs(df):
     return {(r[0], r[1]) for r in df.collect()}
 
 
+def _artifact_cols(direction):
+    cols = ["__rid", "__lvl", "__blk", "__cpos", "__wb", "__w"]
+    return cols if direction is None else cols + ["__dir"]
+
+
 def test_projection_probe_equals_batch_candidates(spark):
     """Index/probe split ≡ the batch candidate generator at the same
-    window, on GENERAL-dim vectors — including batch-split invariance
-    (two probe batches union to the one-shot batch result) and the
-    metadata defaults (probe reads __w AND __dir off the artifact)."""
+    window, at both keys — including batch-split invariance (two probe
+    batches union to the one-shot batch result) and the metadata
+    defaults (probe reads __w AND __dir off the artifact)."""
     from prod_recommendation_pyspark_spark.operators.hybrid import (
-        projection_window_candidates,
-        projection_window_index,
-        projection_window_probe,
+        rank_window_candidates,
+        rank_window_index,
+        rank_window_probe,
     )
 
-    pros, clis, _ = _pw_fixture(spark)
-    batch = projection_window_candidates(
-        pros, clis, "tgt", "src", DIRECTION, window=8
-    )
-    index = projection_window_index(
-        clis, "src", DIRECTION, window=8
-    ).localCheckpoint()
-    assert index.select("__dir").distinct().count() == 1
-    b0 = pros.filter(F.col("tgt") % 3 == 0)
-    b1 = pros.filter(F.col("tgt") % 3 != 0)
-    probed = projection_window_probe(
-        b0, index, "tgt", "src"
-    ).unionByName(projection_window_probe(b1, index, "tgt", "src"))
-    assert _pairs(probed) == _pairs(batch)
-    assert batch.count() > 0
+    for direction in KEYS:
+        pros, clis, _ = _pw_fixture(spark, direction)
+        batch = rank_window_candidates(
+            pros, clis, "tgt", "src", window=8, direction=direction
+        )
+        index = rank_window_index(
+            clis, "src", window=8, direction=direction
+        ).localCheckpoint()
+        if direction is not None:
+            assert index.select("__dir").distinct().count() == 1
+        b0 = pros.filter(F.col("tgt") % 3 == 0)
+        b1 = pros.filter(F.col("tgt") % 3 != 0)
+        probed = rank_window_probe(
+            b0, index, "tgt", "src"
+        ).unionByName(rank_window_probe(b1, index, "tgt", "src"))
+        assert _pairs(probed) == _pairs(batch)
+        assert batch.count() > 0
 
 
 def test_projection_metadata_guards(spark):
-    """Mismatched or wrong-family probes raise LOUDLY: a projection
-    probe with a different direction, a 2-D probe against a projection
-    artifact, a projection probe against a 2-D artifact, and a
-    mixed-direction artifact (two builds unioned)."""
-    import math
-
+    """The artifact decides the key: a direction-less probe of a __dir
+    artifact equals the batch candidates at the stored direction.
+    Mismatches raise LOUDLY: an explicit different direction, an
+    explicit direction against a 2-D artifact, and mixed-direction or
+    mixed-window artifacts (two builds unioned)."""
     from prod_recommendation_pyspark_spark.operators.hybrid import (
-        projection_window_index,
-        projection_window_probe,
+        rank_window_candidates,
         rank_window_index,
         rank_window_probe,
     )
 
     pros, clis, _ = _pw_fixture(spark)
-    index = projection_window_index(
-        clis, "src", DIRECTION, window=8
+    index = rank_window_index(
+        clis, "src", window=8, direction=DIRECTION
     ).localCheckpoint()
+    batch = rank_window_candidates(
+        pros, clis, "tgt", "src", window=8, direction=DIRECTION
+    )
+    assert _pairs(rank_window_probe(pros, index, "tgt", "src")) == _pairs(batch)
     with pytest.raises(ValueError, match="does not match"):
-        projection_window_probe(
+        rank_window_probe(
             pros, index, "tgt", "src", direction=[1.0, 0.0, 0.0, 0.0, 0.0]
         )
-    with pytest.raises(ValueError, match="projection_window_probe"):
-        rank_window_probe(pros, index, "tgt", "src")
     mixed = index.unionByName(
-        projection_window_index(
-            clis, "src", [1.0, 0.0, 0.0, 0.0, 0.0], window=8
+        rank_window_index(
+            clis, "src", window=8, direction=[1.0, 0.0, 0.0, 0.0, 0.0]
         )
     )
     with pytest.raises(ValueError, match="MIXED projection directions"):
-        projection_window_probe(pros, mixed, "tgt", "src")
-
-    rows2 = [
-        (
-            i,
-            f"52{i % 3}1{i % 4}0",
-            [math.cos(0.1 + 1.3 * i / 60), math.sin(0.1 + 1.3 * i / 60)],
-            float(i % 50),
-            float(i % 80),
-        )
-        for i in range(60)
-    ]
-    df2 = spark.createDataFrame(
-        rows2, "src long, naics string, vec array<double>, lat double, lon double"
+        rank_window_probe(pros, mixed, "tgt", "src")
+    mixed_w = index.unionByName(
+        rank_window_index(clis, "src", window=16, direction=DIRECTION)
     )
-    idx2d = rank_window_index(df2, "src", window=8)
-    with pytest.raises(ValueError, match="rank_window_probe"):
-        projection_window_probe(pros, idx2d, "tgt", "src")
+    with pytest.raises(ValueError, match="MIXED build windows"):
+        rank_window_probe(pros, mixed_w, "tgt", "src")
+
+    pros2, clis2, _ = _pw_fixture(spark, None)
+    idx2d = rank_window_index(clis2, "src", window=8)
+    with pytest.raises(ValueError, match="no __dir metadata"):
+        rank_window_probe(pros2, idx2d, "tgt", "src", direction=[0.6, 0.8])
+
+
+def test_projection_key_rejects_dim_mismatch(spark):
+    """The projection key reads one vector component per direction
+    entry — against longer vectors it silently ignores the tail,
+    against shorter ones it reads NULL keys.  A 3-entry direction
+    against 5-dim vectors must raise at index build, probe and
+    insert."""
+    from prod_recommendation_pyspark_spark.operators.hybrid import (
+        rank_window_index,
+        rank_window_insert,
+        rank_window_probe,
+    )
+
+    pros, clis, _ = _pw_fixture(spark)  # 5-dim vectors
+    short = DIRECTION[:3]
+    with pytest.raises(ValueError, match="dim=5"):
+        rank_window_index(clis, "src", window=8, direction=short)
+    # an artifact keyed by the 3-entry direction over 3-dim clients
+    clis3 = clis.withColumn("vec", F.slice("vec", 1, 3))
+    idx3 = rank_window_index(clis3, "src", window=8, direction=short)
+    with pytest.raises(ValueError, match="dim=5"):
+        rank_window_probe(pros, idx3, "tgt", "src")
+    arrivals = clis.withColumn("src", F.col("src") + 1000)
+    with pytest.raises(ValueError, match="dim=5"):
+        rank_window_insert(idx3, arrivals, "src")
 
 
 def test_projection_insert_compact_equal_rebuild(spark):
-    """The CRUD cells dispatch on the artifact's metadata:
+    """The CRUD cells key by the artifact's metadata, at both keys:
     rank_window_insert on a __dir artifact keys the ARRIVALS with the
     stored projection (insert ≡ rebuild, intra-batch duplicates
     dropped), and rank_window_compact re-ranks stored keys and
     re-stamps __dir (compact ≡ rebuild-minus-deleted)."""
     from prod_recommendation_pyspark_spark.operators.hybrid import (
-        projection_window_index,
         rank_window_compact,
+        rank_window_index,
         rank_window_insert,
     )
 
-    _, clis, tombs = _pw_fixture(spark)
-    cols = ["__rid", "__lvl", "__blk", "__cpos", "__wb", "__w", "__dir"]
-    key = lambda df: {tuple(r) for r in df.select(*cols).collect()}  # noqa: E731
+    for direction in KEYS:
+        _, clis, tombs = _pw_fixture(spark, direction)
+        cols = _artifact_cols(direction)
+        key = lambda df: {tuple(r) for r in df.select(*cols).collect()}  # noqa: E731
 
-    old = clis.filter(F.col("src") % 6 != 5)
-    arrivals = clis.filter(F.col("src") % 6 == 5)
-    index = projection_window_index(old, "src", DIRECTION, window=8)
-    # same new id twice in one arrival frame: inserts exactly once
-    grown = rank_window_insert(
-        index, arrivals.unionByName(arrivals.limit(2)), "src"
-    )
-    rebuilt = projection_window_index(clis, "src", DIRECTION, window=8)
-    assert key(grown) == key(rebuilt)
-    assert arrivals.count() > 0
+        def build(df):
+            return rank_window_index(df, "src", window=8, direction=direction)
 
-    full = projection_window_index(clis, "src", DIRECTION, window=8)
-    compacted = rank_window_compact(full, tombs)
-    kept = clis.join(F.broadcast(tombs), "src", "left_anti")
-    rebuilt_minus = projection_window_index(kept, "src", DIRECTION, window=8)
-    assert key(compacted) == key(rebuilt_minus)
-    assert tombs.count() > 0
+        old = clis.filter(F.col("src") % 6 != 5)
+        arrivals = clis.filter(F.col("src") % 6 == 5)
+        # same new id twice in one arrival frame: inserts exactly once
+        grown = rank_window_insert(
+            build(old), arrivals.unionByName(arrivals.limit(2)), "src"
+        )
+        assert key(grown) == key(build(clis))
+        assert arrivals.count() > 0
+
+        compacted = rank_window_compact(build(clis), tombs)
+        kept = clis.join(F.broadcast(tombs), "src", "left_anti")
+        assert key(compacted) == key(build(kept))
+        assert tombs.count() > 0
 
 
 def test_projection_tombstone_probe(spark):
-    """Tombstoned serving between rebuilds: the probe equals the
-    un-tombstoned probe minus the deleted clients' pairs, and no
-    deleted id ever surfaces."""
+    """Tombstoned serving between rebuilds, at both keys: the probe
+    equals the un-tombstoned probe minus the deleted clients' pairs,
+    and no deleted id ever surfaces."""
     from prod_recommendation_pyspark_spark.operators.hybrid import (
-        projection_window_index,
-        projection_window_probe,
+        rank_window_index,
+        rank_window_probe,
     )
 
-    pros, clis, tombs = _pw_fixture(spark)
-    index = projection_window_index(
-        clis, "src", DIRECTION, window=8
-    ).localCheckpoint()
-    plain = _pairs(projection_window_probe(pros, index, "tgt", "src"))
-    tombed = _pairs(
-        projection_window_probe(
-            pros, index, "tgt", "src", tombstones=tombs
+    for direction in KEYS:
+        pros, clis, tombs = _pw_fixture(spark, direction)
+        index = rank_window_index(
+            clis, "src", window=8, direction=direction
+        ).localCheckpoint()
+        plain = _pairs(rank_window_probe(pros, index, "tgt", "src"))
+        tombed = _pairs(
+            rank_window_probe(pros, index, "tgt", "src", tombstones=tombs)
         )
-    )
-    dead = {r["src"] for r in tombs.collect()}
-    assert tombed == {(t, s) for (t, s) in plain if s not in dead}
-    assert len(tombed) < len(plain)
+        dead = {r["src"] for r in tombs.collect()}
+        assert tombed == {(t, s) for (t, s) in plain if s not in dead}
+        assert len(tombed) < len(plain)
 
 
 def test_projection_window_dispatch_rule(spark):
     """The kernel-vs-window cost rule and its derivation feed:
     (a) `projection_window_wins` boundaries at the measured cost
-    ratio; (b) `derive_projection_window_stats` lands a ladder window
+    ratio; (b) `derive_rank_window_stats` lands a ladder window
     covering 2× the sampled max-need on general-dim vectors."""
     from prod_recommendation_pyspark_spark.operators.hybrid import (
         PROJECTION_WINDOW_COST_RATIO,
         RANK_WINDOW_LADDER,
-        derive_projection_window_stats,
+        derive_rank_window_stats,
         projection_window_wins,
     )
 
@@ -209,8 +238,9 @@ def test_projection_window_dispatch_rule(spark):
     assert projection_window_wins(64, edge + 1) is True
 
     pros, clis, _ = _pw_fixture(spark)
-    stats = derive_projection_window_stats(
-        pros, clis, "tgt", "src", DIRECTION, sample_mod=4, min_window=64
+    stats = derive_rank_window_stats(
+        pros, clis, "tgt", "src", sample_mod=4, min_window=64,
+        direction=DIRECTION,
     )
     assert stats["window"] in RANK_WINDOW_LADDER
     assert stats["n_sampled"] >= 8
@@ -226,8 +256,8 @@ def test_emptied_projection_artifact_compact_insert_graceful(spark):
     (c) insert WITHOUT the fallback raises an error naming
     rank_window_insert (not the probe)."""
     from prod_recommendation_pyspark_spark.operators.hybrid import (
-        projection_window_index,
         rank_window_compact,
+        rank_window_index,
         rank_window_insert,
     )
 
@@ -236,7 +266,7 @@ def test_emptied_projection_artifact_compact_insert_graceful(spark):
     # rows, so a fully-emptied artifact genuinely loses its stored
     # __w/__dir and re-seeding falls back to the defaults + the
     # caller-supplied direction
-    index = projection_window_index(clis, "src", DIRECTION, window=64)
+    index = rank_window_index(clis, "src", window=64, direction=DIRECTION)
     all_tombs = clis.select("src")
     emptied = rank_window_compact(index, all_tombs)
     assert emptied.count() == 0
@@ -248,8 +278,10 @@ def test_emptied_projection_artifact_compact_insert_graceful(spark):
     reseeded = rank_window_insert(
         emptied, arrivals, "src", direction=DIRECTION
     )
-    rebuilt = projection_window_index(arrivals, "src", DIRECTION, window=64)
-    cols = ["__rid", "__lvl", "__blk", "__cpos", "__wb", "__w", "__dir"]
+    rebuilt = rank_window_index(
+        arrivals, "src", window=64, direction=DIRECTION
+    )
+    cols = _artifact_cols(DIRECTION)
     got = {tuple(r) for r in reseeded.select(*cols).collect()}
     want = {tuple(r) for r in rebuilt.select(*cols).collect()}
     assert got == want
@@ -297,19 +329,14 @@ def test_serve_batch_routes_agree(spark):
     routes (probe+re-rank vs exact kernel) when the window covers the
     true top-k — forced via n_right on the fixture (tiny corpus →
     kernel; huge claimed corpus at small window → probe) — and both
-    equal the bare exact kernel.  Also: tombstoned clients never
-    surface on either route."""
+    equal the bare exact kernel, at both keys.  Also: tombstoned
+    clients never surface on either route."""
     from prod_recommendation_pyspark_spark.operators.hybrid import (
         hybrid_topk,
-        projection_window_index,
+        rank_window_index,
         serve_batch,
     )
 
-    pros, clis, tombs = _pw_fixture(spark)
-    batch = pros.filter(F.col("tgt") % 3 == 0)
-    index = projection_window_index(
-        clis, "src", DIRECTION, window=64
-    ).localCheckpoint()
     kw = dict(vec_col="vec", naics_col="naics", lat_col="lat",
               lon_col="lon", k=5, threshold=0.0)
 
@@ -318,18 +345,24 @@ def test_serve_batch_routes_agree(spark):
             (r["tgt"], r["src"], round(r["score"], 9)) for r in df.collect()
         }
 
-    want = key(hybrid_topk(batch, clis, "tgt", "src", **kw))
-    # n_right=90 (true corpus) -> clamped ratio ~1.02, 14*64*1.02 > 90
-    # -> KERNEL route; n_right=10M with window 64 -> probe route
-    via_kernel = key(serve_batch(batch, index, clis, "tgt", "src",
-                                 n_right=clis.count(), **kw))
-    via_probe = key(serve_batch(batch, index, clis, "tgt", "src",
-                                n_right=10_000_000, **kw))
-    assert via_kernel == want
-    assert via_probe == want
-    # tombstones honored on both routes
-    dead = {r["src"] for r in tombs.collect()}
-    for forced in (clis.count(), 10_000_000):
-        got = serve_batch(batch, index, clis, "tgt", "src",
-                          n_right=forced, tombstones=tombs, **kw)
-        assert not ({r["src"] for r in got.collect()} & dead)
+    for direction in KEYS:
+        pros, clis, tombs = _pw_fixture(spark, direction)
+        batch = pros.filter(F.col("tgt") % 3 == 0)
+        index = rank_window_index(
+            clis, "src", window=64, direction=direction
+        ).localCheckpoint()
+        want = key(hybrid_topk(batch, clis, "tgt", "src", **kw))
+        # n_right=90 (true corpus) -> clamped ratio ~1.02, 14*64*1.02 > 90
+        # -> KERNEL route; n_right=10M with window 64 -> probe route
+        via_kernel = key(serve_batch(batch, index, clis, "tgt", "src",
+                                     n_right=clis.count(), **kw))
+        via_probe = key(serve_batch(batch, index, clis, "tgt", "src",
+                                    n_right=10_000_000, **kw))
+        assert via_kernel == want
+        assert via_probe == want
+        # tombstones honored on both routes
+        dead = {r["src"] for r in tombs.collect()}
+        for forced in (clis.count(), 10_000_000):
+            got = serve_batch(batch, index, clis, "tgt", "src",
+                              n_right=forced, tombstones=tombs, **kw)
+            assert not ({r["src"] for r in got.collect()} & dead)
